@@ -51,11 +51,39 @@ def _is_numeric(dtype: T.DataType) -> bool:
     return isinstance(dtype, _NUMERIC_SPARK_TYPES)
 
 
+def qname(name: str) -> str:
+    """SQL identifier for a *literal* column name — backtick-quoted with
+    inner backticks doubled, so variable names containing dots (common in
+    R-origin data, e.g. ``sch.wide`` in the reference's api dataset) are
+    not parsed as struct access. The string form of :func:`qcol`, for
+    wide projections rendered as ONE ``selectExpr`` parse: building them
+    from ``Column`` objects costs several py4j round trips per column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def qlit(value) -> str:
+    """SQL string literal for ``str(value)``: backslashes and single
+    quotes escaped (Spark's default, non-legacy string-literal parser)."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def qcol(name: str) -> F.Column:
-    """Column reference by *literal* name — backtick-quoted so variable
-    names containing dots (common in R-origin data, e.g. ``sch.wide`` in
-    the reference's api dataset) are not parsed as struct access."""
-    return F.col(f"`{name.replace('`', '``')}`")
+    """Column reference by *literal* name (see :func:`qname`)."""
+    return F.col(qname(name))
+
+
+def sort_result(df: DataFrame, *order) -> DataFrame:
+    """Sort a small result frame (one row per tested variable or pair,
+    at most ~10^6 rows) on ONE partition.
+
+    A global ``orderBy`` plans a range-partitioned exchange whose
+    partitioner first runs a sampling job over the sort's input — for a
+    result frame that input is the whole fan-out (melt + Python kernel),
+    which would then run twice. ``repartition(1)`` plans a single-partition
+    exchange with no sampling job, and the sort stays a per-partition
+    sort. (Not ``coalesce(1)``: that would push one-task parallelism down
+    into the kernel's stage.)"""
+    return df.repartition(1).sortWithinPartitions(*order)
 
 
 @dataclass
@@ -168,7 +196,9 @@ class ClariteFrame:
         return ClariteFrame(df, cat)
 
     def select_variables(self, cols: Sequence[str]) -> "ClariteFrame":
-        return self.with_df(self.df.select(ID_COL, *[qcol(c).alias(c) for c in cols]))
+        return self.with_df(
+            self.df.selectExpr(qname(ID_COL), *[f"{qname(c)} AS {qname(c)}" for c in cols])
+        )
 
     def category_levels(self, col: str) -> list:
         """Sorted distinct non-null levels; cached in the catalog.
@@ -187,8 +217,8 @@ class ClariteFrame:
         todo = [c for c in dict.fromkeys(cols) if c not in self.catalog.categories]
         if not todo:
             return
-        row = self.df.agg(
-            *[F.collect_set(qcol(c)).alias(f"l::{c}") for c in todo]
+        row = self.df.selectExpr(
+            *[f"collect_set({qname(c)}) AS {qname('l::' + c)}" for c in todo]
         ).collect()[0]
         for c in todo:
             self.catalog.categories[c] = sorted(row[f"l::{c}"])

@@ -42,7 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clarite_python_spark.catalog import BINARY, CATEGORICAL, CONTINUOUS, qcol
+from clarite_python_spark.catalog import BINARY, CATEGORICAL, CONTINUOUS, qcol, qname
 from clarite_python_spark.functions.distributions import chi2_sf
 from clarite_python_spark.functions.glm import dummy_encode, fit_binomial_freq
 
@@ -199,16 +199,13 @@ def binomial_contingency_rows(
     if unknown or covariates:
         # one selectExpr parse instead of 3-4 py4j round trips per
         # column (r13 construction-cost idiom); identical HLL agg
-        def _qg(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
         gate = df.selectExpr(
             *[
-                f"approx_count_distinct({_qg(v)}) AS {_qg('v::' + v)}"
+                f"approx_count_distinct({qname(v)}) AS {qname('v::' + v)}"
                 for v in unknown
             ],
             *[
-                f"approx_count_distinct({_qg(c)}) AS {_qg('c::' + c)}"
+                f"approx_count_distinct({qname(c)}) AS {qname('c::' + c)}"
                 for c in covariates
             ],
         ).collect()[0]
@@ -242,17 +239,15 @@ def binomial_contingency_rows(
     # the Column-API build paid 2-3 py4j round trips per variable —
     # ~2.5 s of construction at GWAS width (measured, 1,000 SNPs).
     # Identical projection: backtick-quoted literal names (qcol
-    # semantics), same CAST, same output names.
-    def _q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
+    # semantics), same CAST, same output names; the unpivot's values
+    # default to every non-id column, i.e. exactly ``eligible``.
     val_exprs = (
-        [_q(v) for v in eligible]
+        [qname(v) for v in eligible]
         if native
-        else [f"CAST({_q(v)} AS STRING) AS {_q(v)}" for v in eligible]
+        else [f"CAST({qname(v)} AS STRING) AS {qname(v)}" for v in eligible]
     )
-    long = df.selectExpr(*[_q(c) for c in id_vars], *val_exprs).unpivot(
-        id_vars, eligible, "variable", "value"
+    long = df.selectExpr(*[qname(c) for c in id_vars], *val_exprs).unpivot(
+        [qcol(c) for c in id_vars], None, "variable", "value"
     )
     cells = (
         long.groupBy("variable", "value", outcome, *covariates)

@@ -45,11 +45,15 @@ at a row sample first.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from clarite_python_spark.catalog import qname
 
 __all__ = ["block_correlations"]
 
@@ -115,9 +119,8 @@ def _partials_fn(n_iblocks: int, block_size: int):
 def _finish_fn(i_lo: int, block_size: int, threshold: float):
     """applyInPandas reducer: sum per-partition payloads for one (I, J)
     block pair, finish the correlation, emit |r| >= threshold cells."""
-    import pandas as pd
 
-    def finish(key, pdf):
+    def finish(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         iblock, jblock = (int(k) for k in key)
         rows_i, rows_j = pdf["shape"].iloc[0]
         tot = np.zeros((_STATS, rows_i, rows_j), dtype=np.float64)
@@ -194,6 +197,10 @@ def block_correlations(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    if len(set(cols)) != len(cols):
+        dup = sorted(c for c, k in Counter(cols).items() if k > 1)
+        # the dtype lookup below and the projection both key on names
+        raise ValueError(f"duplicate column names in cols: {dup}")
     p = len(cols)
     n_blocks = (p + block_size - 1) // block_size
     payload_bytes = _STATS * block_size * block_size * 8
@@ -210,9 +217,7 @@ def block_correlations(
             # dotted/backticked names keep the quoted CAST path below
             sub = df.select(*tail)
         else:
-            sub = df.selectExpr(
-                *[f"CAST(`{c}` AS DOUBLE) AS `{c}`" for c in tail]
-            )
+            sub = df.selectExpr(*[f"CAST({qname(c)} AS DOUBLE) AS {qname(c)}" for c in tail])
         partials = sub.mapInArrow(
             _partials_fn(len(chunk), block_size),
             "iblock int, jblock int, payload binary, shape array<int>",

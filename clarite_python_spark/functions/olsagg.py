@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol
+from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol, qname
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 
 __all__ = ["gaussian_assoc_rows", "gaussian_interaction_rows"]
@@ -156,11 +156,14 @@ def _collect_unit_stats(
 
     cov_list, cov_types, lv, outcome_col = covariates, dict(covar_types), levels, outcome
 
+    need = [outcome, *covariates, *member_cols]
+
     def partials(batches):
         for pdf in batches:
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
+            pdf = pdf.set_axis(need, axis=1)
             c_design, c_ok = _covariate_frame(pdf, cov_list, cov_types, lv)
             y = pd.to_numeric(pdf[outcome_col]).to_numpy(dtype=float)
             base_ok = c_ok & ~np.isnan(y)
@@ -192,10 +195,12 @@ def _collect_unit_stats(
                 out[f"uu{am}_{bm}"] = rect_uu[:, am, bm]
             yield pd.DataFrame(out)
 
-    need = [outcome, *covariates, *member_cols]
-    partial_df = df.select(*[qcol(c).alias(c) for c in need]).mapInPandas(
-        partials, out_schema
-    )
+    # positional aliases: mapInPandas re-resolves its input columns by
+    # name, which parses dots and backticks; the batches get the real
+    # names back in ``partials``
+    partial_df = df.selectExpr(
+        *[f"{qname(c)} AS _{i}" for i, c in enumerate(need)]
+    ).mapInPandas(partials, out_schema)
     reduced = (
         partial_df.groupBy("unit")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])

@@ -9,11 +9,17 @@ independence becomes the distributed axis:
 
     wide df --unpivot(RV cols)--> long (ID, outcome, covars..., variable, value)
         --groupBy("variable").applyInPandas(numpy GLM kernel)--> result rows
-        --orderBy(pvalue)
+        --repartition(1).sortWithinPartitions(pvalue)
 
 The unpivot is a Catalyst ``Expand`` (one scan); the only shuffle keys on
 ``variable``, so each reducer handles ~|rows| values — the correct layout
-up to ~10^7 rows/group. Beyond that (100-TB regime) a columnar strategy —
+up to ~10^7 rows/group. The result (one row per variable, <=10^6 rows) is
+sorted on ONE partition (``catalog.sort_result``): a global ``orderBy``
+would plan a range exchange whose sampling job runs the whole fan-out a
+second time. The melt's projection is rendered as one ``selectExpr``
+parse, not one ``Column`` per variable (py4j round trips).
+
+Beyond ~10^7 rows/group (100-TB regime) a columnar strategy —
 one Spark ML ``GeneralizedLinearRegression`` job per variable scheduled
 from a driver thread pool over column-sliced DataFrames — keeps the same
 result schema; the melt path is the default because EWAS tables are wide
@@ -45,6 +51,9 @@ from clarite_python_spark.catalog import (
     UNKNOWN,
     ClariteFrame,
     qcol,
+    qlit,
+    qname,
+    sort_result,
 )
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 from clarite_python_spark.functions.glm import (
@@ -181,7 +190,7 @@ def _make_assoc_kernel(
     fit -> extract Wald (continuous/binary RV) or LRT (categorical RV).
     """
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rv = key[0]
         vtype = rv_types[rv]
         rows: list[dict] = []
@@ -281,7 +290,6 @@ def _encode_genotype_variables(
     from clarite_python_spark.catalog import GENOTYPES
     from clarite_python_spark.functions.genotypes import (
         KNOWN_ENCODINGS,
-        _sql_name,
         edge_alphas,
         encode_genotype_sql,
     )
@@ -313,7 +321,7 @@ def _encode_genotype_variables(
         exprs[c] = sql
         cat.set(c, new_type)
     select = [
-        f"{exprs[c]} AS {_sql_name(c)}" if c in exprs else _sql_name(c)
+        f"{exprs[c]} AS {qname(c)}" if c in exprs else qname(c)
         for c in df.columns
     ]
     return ClariteFrame(df.selectExpr(*select), cat)
@@ -409,7 +417,7 @@ def _make_weighted_kernel(
     has_strata = constants["has_strata"]
     has_cluster = constants["has_cluster"]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rv = key[0]
         vtype = rv_types[rv]
         rows: list[dict] = []
@@ -579,15 +587,15 @@ def _zscore_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     if not cols:
         return df
     stats = df.agg(
-        *[F.mean(c).alias(f"mu::{c}") for c in cols],
-        *[F.stddev_samp(c).alias(f"sd::{c}") for c in cols],
+        *[F.mean(qcol(c)).alias(f"mu::{c}") for c in cols],
+        *[F.stddev_samp(qcol(c)).alias(f"sd::{c}") for c in cols],
     )
     joined = df.crossJoin(F.broadcast(stats))
     return joined.select(
         *[
-            ((F.col(c) - F.col(f"`mu::{c}`")) / F.col(f"`sd::{c}`")).alias(c)
+            ((qcol(c) - qcol("mu::" + c)) / qcol("sd::" + c)).alias(c)
             if c in set(cols)
-            else F.col(c)
+            else qcol(c)
             for c in df.columns
         ]
     )
@@ -1162,9 +1170,12 @@ def association_study(
                 )
         grouped_res = None
         if group:
-            long = df.select(
-                *id_vars, *[qcol(c).cast("string").alias(c) for c in group]
-            ).unpivot(id_vars, group, "variable", "value")
+            # ONE selectExpr parse; the unpivot's values default to every
+            # non-id column, i.e. exactly ``group`` in order
+            long = df.selectExpr(
+                *[qname(c) for c in id_vars],
+                *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in group],
+            ).unpivot([qcol(c) for c in id_vars], None, "variable", "value")
             grouped_res = long.groupBy("variable").applyInPandas(
                 kernel, RESULT_SCHEMA
             )
@@ -1212,7 +1223,7 @@ def association_study(
     order = [F.asc_nulls_last("pvalue")]
     if report_categorical_betas:
         order.append(F.asc_nulls_last("Beta_pvalue"))
-    return out.orderBy(*order)
+    return sort_result(out, *order)
 
 
 def ewas(
@@ -1260,10 +1271,12 @@ def add_corrected_pvalues(
         keys = [groupby] if isinstance(groupby, str) else list(groupby)
         base = result.select(*keys, pvalue).dropDuplicates(keys)
         corrected = add_corrected_pvalues(base, pvalue=pvalue, groupby=None)
-        return result.join(
-            corrected.select(*keys, "pvalue_bonferroni", "pvalue_fdr"), on=keys, how="left"
-        ).orderBy(
-            F.asc_nulls_last("pvalue_fdr"), F.asc_nulls_last("pvalue_bonferroni")
+        return sort_result(
+            result.join(
+                corrected.select(*keys, "pvalue_bonferroni", "pvalue_fdr"), on=keys, how="left"
+            ),
+            F.asc_nulls_last("pvalue_fdr"),
+            F.asc_nulls_last("pvalue_bonferroni"),
         )
 
     non_na = F.when(F.col(pvalue).isNotNull() & ~F.isnan(pvalue), 1).otherwise(0)
@@ -1491,24 +1504,23 @@ def interaction_study(
         )
         for start in range(0, len(my_pairs), pair_batch_size):
             batch = my_pairs[start : start + pair_batch_size]
-            structs = [
-                F.struct(
-                    F.lit(t1).alias("Term1"),
-                    F.lit(t2).alias("Term2"),
-                    F.col(t1).cast("string").alias("v1"),
-                    F.col(t2).cast("string").alias("v2"),
-                )
+            # the pair Expand as ONE selectExpr parse: four Columns per
+            # pair would cost py4j round trips per pair
+            structs = ", ".join(
+                f"named_struct('Term1', {qlit(t1)}, 'Term2', {qlit(t2)},"
+                f" 'v1', CAST({qname(t1)} AS STRING), 'v2', CAST({qname(t2)} AS STRING))"
                 for t1, t2 in batch
-            ]
-            long = df.select(
-                ID_COL, outcome, *covariates, F.explode(F.array(*structs)).alias("__pair")
-            ).select(ID_COL, outcome, *covariates, "__pair.*")
+            )
+            keep = [qname(c) for c in (ID_COL, outcome, *covariates)]
+            long = df.selectExpr(*keep, f"explode(array({structs})) AS __pair").selectExpr(
+                *keep, "__pair.*"
+            )
             res = long.groupBy("Term1", "Term2").applyInPandas(kernel, INTERACTION_SCHEMA)
             results.append(res)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    return out.orderBy(F.asc_nulls_last("LRT_pvalue"))
+    return sort_result(out, F.asc_nulls_last("LRT_pvalue"))
 
 
 def _encode_term(sub: pd.DataFrame, col: str, vtype: str, name: str):
@@ -1529,7 +1541,7 @@ def _make_interaction_kernel(
     min_n: int,
     report_betas: bool,
 ):
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         t1, t2 = key
         rows: list[dict] = []
         try:

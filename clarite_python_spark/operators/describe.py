@@ -2,7 +2,16 @@
 
 All are expressed as batched single-pass aggregations (one scan for any
 number of columns) followed by a driver-side or Expand-based reshape of
-the tiny (1 x N) stats row — never one job per column.
+the tiny (1 x N) stats row — never one job per column. Each wide
+aggregation is rendered as ONE ``selectExpr`` parse rather than one
+``Column`` per variable (each ``Column`` costs py4j round trips).
+
+Result tables are small (one row per variable or per pair), so they are
+sorted on ONE partition: rows already on the driver are sorted in Python
+before ``createDataFrame`` (collecting them runs no Spark job), and
+Spark-side results go through ``catalog.sort_result`` — a global
+``orderBy`` would plan a range exchange whose sampling job runs the
+aggregation a second time.
 """
 
 from __future__ import annotations
@@ -20,6 +29,8 @@ from clarite_python_spark.catalog import (
     ID_COL,
     ClariteFrame,
     qcol,
+    qname,
+    sort_result,
     validate_skip_only,
 )
 from clarite_python_spark.functions.distributions import skewtest_z_p
@@ -59,8 +70,8 @@ def correlations(cf: ClariteFrame, threshold: float = 0.75, _wide_limit: int = 8
     if not pairs:
         return spark.createDataFrame([], "var1 string, var2 string, correlation double")
     if len(cols) <= _wide_limit:
-        aggs = [F.corr(qcol(a), qcol(b)).alias(f"{a}::{b}") for a, b in pairs]
-        row = cf.df.agg(*aggs).collect()[0]
+        aggs = [f"corr({qname(a)}, {qname(b)}) AS {qname(f'{a}::{b}')}" for a, b in pairs]
+        row = cf.df.selectExpr(*aggs).collect()[0]
         data = [
             (a, b, float(row[f"{a}::{b}"]))
             for a, b in pairs
@@ -70,8 +81,10 @@ def correlations(cf: ClariteFrame, threshold: float = 0.75, _wide_limit: int = 8
         from clarite_python_spark.functions.blockcorr import block_correlations
 
         data = block_correlations(cf.df, cols, threshold=threshold)
-    out = spark.createDataFrame(data, "var1 string, var2 string, correlation double")
-    return out.orderBy(F.abs(F.col("correlation")).desc(), "var1", "var2")
+    # |corr| desc, then names: no NaN survives the threshold filter, and
+    # Python's code-point string order equals Spark's UTF-8 byte order
+    data.sort(key=lambda t: (-abs(t[2]), t[0], t[1]))
+    return spark.createDataFrame(data, "var1 string, var2 string, correlation double")
 
 
 def freq_table(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
@@ -88,17 +101,17 @@ def freq_table(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     spark = cf.df.sparkSession
     parts = []
     if cat_cols:
-        long = cf.df.select(*[qcol(c).cast("string").alias(c) for c in cat_cols]).unpivot(
-            [], cat_cols, "variable", "value"
-        )
+        long = cf.df.selectExpr(
+            *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in cat_cols]
+        ).unpivot([], None, "variable", "value")
         parts.append(
             long.where(F.col("value").isNotNull())
             .groupBy("variable", "value")
             .agg(F.count(F.lit(1)).alias("count"))
         )
     if other_cols:
-        row = cf.df.agg(*[F.count(qcol(c)).alias(c) for c in other_cols])
-        counts = row.unpivot([], other_cols, "variable", "count").select(
+        row = cf.df.selectExpr(*[f"count({qname(c)}) AS {qname(c)}" for c in other_cols])
+        counts = row.unpivot([], None, "variable", "count").select(
             "variable", F.lit("<Non-Categorical Values>").alias("value"), F.col("count")
         )
         parts.append(counts)
@@ -107,7 +120,7 @@ def freq_table(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy("variable", F.col("count").desc(), "value")
+    return sort_result(out, "variable", F.col("count").desc(), "value")
 
 
 def get_types(cf: ClariteFrame) -> DataFrame:
@@ -122,10 +135,11 @@ def percent_na(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     """Percent NA per variable (describe.py:166-194, kernel :191).
     One agg scan, reshaped with a 1-row unpivot."""
     cols = validate_skip_only(cf.variables, skip, only)
-    row = cf.df.agg(
-        *[((1.0 - F.count(qcol(c)) / F.count(F.lit(1))) * 100.0).alias(c) for c in cols]
+    # 1.0D / 100.0D: a bare 1.0 is a DECIMAL literal in Spark SQL
+    row = cf.df.selectExpr(
+        *[f"((1.0D - (count({qname(c)}) / count(1))) * 100.0D) AS {qname(c)}" for c in cols]
     )
-    return row.unpivot([], cols, "variable", "percent_na").orderBy("variable")
+    return sort_result(row.unpivot([], None, "variable", "percent_na"), "variable")
 
 
 def skewness(cf: ClariteFrame, dropna: bool = True, skip=None, only=None) -> DataFrame:
@@ -145,10 +159,10 @@ def skewness(cf: ClariteFrame, dropna: bool = True, skip=None, only=None) -> Dat
             [], "variable string, skew double, zscore double, pvalue double"
         )
     row = (
-        cf.df.agg(
-            *[F.skewness(qcol(c)).alias(f"g1::{c}") for c in cols],
-            *[F.count(qcol(c)).alias(f"n::{c}") for c in cols],
-            *[F.count(F.lit(1)).alias("n::__rows__")][:1],
+        cf.df.selectExpr(
+            *[f"skewness({qname(c)}) AS {qname('g1::' + c)}" for c in cols],
+            *[f"count({qname(c)}) AS {qname('n::' + c)}" for c in cols],
+            "count(1) AS `n::__rows__`",
         )
         .collect()[0]
         .asDict()
@@ -164,9 +178,10 @@ def skewness(cf: ClariteFrame, dropna: bool = True, skip=None, only=None) -> Dat
             continue
         z, p = skewtest_z_p(float(g1), int(n))
         data.append((c, float(g1), z, p))
+    data.sort(key=lambda t: t[0])
     return spark.createDataFrame(
         data, "variable string, skew double, zscore double, pvalue double"
-    ).orderBy("variable")
+    )
 
 
 def summarize(cf: ClariteFrame) -> dict:

@@ -36,6 +36,7 @@ from clarite_python_spark.catalog import (
     VariableCatalog,
     _is_numeric,
     qcol,
+    qname,
     validate_skip_only,
 )
 
@@ -93,26 +94,26 @@ def categorize(cf: ClariteFrame, cat_min: int = 3, cat_max: int = 6, cont_min: i
     in a single pass, no per-column jobs. Categorical level sets are
     collected in the same pass via ``collect_set`` only for columns that
     end up binary/categorical (second cheap pass over <=cat_max-distinct
-    columns).
+    columns). Each wide plan is rendered as ONE ``selectExpr`` parse.
     """
     df = cf.df
     cols = cf.variables
     numeric = {f.name for f in df.schema.fields if _is_numeric(f.dataType)}
-    aggs: list[Column] = []
+    aggs: list[str] = []
     for c in cols:
-        aggs.append(F.count(qcol(c)).alias(f"n::{c}"))
-        aggs.append(F.count_distinct(qcol(c)).alias(f"d::{c}"))
+        q = qname(c)
+        aggs.append(f"count({q}) AS {qname('n::' + c)}")
+        aggs.append(f"count(DISTINCT {q}) AS {qname('d::' + c)}")
         # non-null values that fail a numeric cast — physically numeric
         # columns can't fail, so skip the (expensive) string round-trip
         if c in numeric:
-            aggs.append(F.lit(0).alias(f"bad::{c}"))
+            aggs.append(f"0 AS {qname('bad::' + c)}")
         else:
             aggs.append(
-                F.sum(
-                    (qcol(c).isNotNull() & qcol(c).cast("string").try_cast("double").isNull()).cast("long")
-                ).alias(f"bad::{c}")
+                f"sum(CAST(({q} IS NOT NULL AND try_cast(CAST({q} AS STRING) AS DOUBLE) IS NULL)"
+                f" AS BIGINT)) AS {qname('bad::' + c)}"
             )
-    stats = df.agg(*aggs).collect()[0].asDict()
+    stats = df.selectExpr(*aggs).collect()[0].asDict()
 
     catalog = VariableCatalog()
     keep: list[str] = []
@@ -137,11 +138,17 @@ def categorize(cf: ClariteFrame, cat_min: int = 3, cat_max: int = 6, cont_min: i
     # cache category levels for the small-cardinality columns in one pass
     small = catalog.of_type(CONSTANT, BINARY, CATEGORICAL)
     if small:
-        level_rows = df.agg(*[F.collect_set(qcol(c)).alias(c) for c in small]).collect()[0].asDict()
+        level_rows = (
+            df.selectExpr(*[f"collect_set({qname(c)}) AS {qname(c)}" for c in small])
+            .collect()[0]
+            .asDict()
+        )
         for c in small:
             catalog.categories[c] = sorted(level_rows[c])
 
-    out = ClariteFrame(df.select(ID_COL, *[qcol(c).alias(c) for c in keep]), catalog)
+    out = ClariteFrame(
+        df.selectExpr(qname(ID_COL), *[f"{qname(c)} AS {qname(c)}" for c in keep]), catalog
+    )
     counts = {t: len(catalog.of_type(t)) for t in (CONSTANT, BINARY, CATEGORICAL, CONTINUOUS, UNKNOWN)}
     return _report(out, {"dropped_all_na": dropped, "type_counts": counts})
 
@@ -279,7 +286,9 @@ def colfilter_min_n(cf: ClariteFrame, n: int = 200, skip=None, only=None) -> Cla
     """Drop variables with fewer than ``n`` non-NA values
     (modify.py:284-340). One agg scan for all candidate columns."""
     cols = validate_skip_only(cf.variables, skip, only)
-    counts = cf.df.agg(*[F.count(qcol(c)).alias(c) for c in cols]).collect()[0].asDict()
+    counts = (
+        cf.df.selectExpr(*[f"count({qname(c)}) AS {qname(c)}" for c in cols]).collect()[0].asDict()
+    )
     dropped = sorted(c for c in cols if counts[c] < n)
     keep = [c for c in cf.variables if c not in set(dropped)]
     return _colfilter_result(cf, keep, dropped, {"non_na_counts": counts})
@@ -299,9 +308,9 @@ def colfilter_min_cat_n(cf: ClariteFrame, n: int = 200, skip=None, only=None) ->
     cand = [c for c in cols if cf.catalog.get(c) in (BINARY, CATEGORICAL)]
     if not cand:
         return _colfilter_result(cf, cf.variables, [], {"min_level_counts": {}})
-    long = cf.df.select(
-        *[qcol(c).cast("string").alias(c) for c in cand]
-    ).unpivot([], cand, "variable", "value")
+    long = cf.df.selectExpr(
+        *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in cand]
+    ).unpivot([], None, "variable", "value")
     mins = (
         long.where(F.col("value").isNotNull())
         .groupBy("variable", "value")
@@ -439,19 +448,14 @@ def remove_outliers(
         return _report(cf.with_df(cf.df), {"columns": []})
     stats = _outlier_bounds(cf.df, cols, method, cutoff, exact)
     joined = cf.df.crossJoin(F.broadcast(stats))
-    new_df = joined.select(
-        *[
-            (
-                F.when(
-                    (qcol(c) < F.col(f"`lo::{c}`")) | (qcol(c) > F.col(f"`hi::{c}`")), F.lit(None)
-                )
-                .otherwise(qcol(c))
-                .alias(c)
-                if c in set(cols)
-                else qcol(c)
-            )
-            for c in cf.df.columns
-        ]
+    colset = set(cols)
+
+    def _masked(c: str) -> str:
+        q, lo, hi = qname(c), qname("lo::" + c), qname("hi::" + c)
+        return f"CASE WHEN (({q} < {lo}) OR ({q} > {hi})) THEN NULL ELSE {q} END AS {q}"
+
+    new_df = joined.selectExpr(
+        *[_masked(c) if c in colset else qname(c) for c in cf.df.columns]
     )
     return _report(cf.with_df(new_df), {"columns": cols, "method": method, "cutoff": cutoff})
 
@@ -461,22 +465,22 @@ def _outlier_bounds(
 ) -> DataFrame:
     """1-row frame of (lo::col, hi::col) cutoffs for every column — one agg
     pass, broadcastable back onto the data."""
-    # each bound renders as one SQL parse (r13 construction-cost idiom)
-    # — identical expression trees to the Column-API build (duplicate
-    # aggregate functions are deduplicated by PhysicalAggregation either
-    # way); the cutoff literal round-trips exactly through repr()
+    # the whole agg renders as ONE selectExpr parse — identical
+    # expression trees to the Column-API build (duplicate aggregate
+    # functions are deduplicated by PhysicalAggregation either way); the
+    # cutoff literal round-trips exactly through repr()
     if not math.isfinite(float(cutoff)):
         # repr() would render 'infD'/'nanD' — an opaque SQL parse error
         # instead of a clear contract violation
         raise ValueError(f"cutoff must be finite, got {cutoff!r}")
     cut = repr(float(cutoff)) + "D"
-    aggs: list[Column] = []
+    aggs: list[str] = []
     for c in cols:
-        qc = "`" + c.replace("`", "``") + "`"
+        qc, lo, hi = qname(c), qname("lo::" + c), qname("hi::" + c)
         if method == "gaussian":
             mean, sd = f"avg({qc})", f"stddev_samp({qc})"
-            aggs.append(F.expr(f"({mean} - ({cut} * {sd}))").alias(f"lo::{c}"))
-            aggs.append(F.expr(f"({mean} + ({cut} * {sd}))").alias(f"hi::{c}"))
+            aggs.append(f"({mean} - ({cut} * {sd})) AS {lo}")
+            aggs.append(f"({mean} + ({cut} * {sd})) AS {hi}")
         elif method == "iqr":
             # ONE percentile buffer per column (array of quantiles), not two
             if exact:
@@ -484,15 +488,11 @@ def _outlier_bounds(
             else:
                 qs = f"approx_percentile({qc}, array(0.25, 0.75), 10000)"
             q1, q3 = f"{qs}[0]", f"{qs}[1]"
-            aggs.append(
-                F.expr(f"({q1} - ({cut} * ({q3} - {q1})))").alias(f"lo::{c}")
-            )
-            aggs.append(
-                F.expr(f"({q3} + ({cut} * ({q3} - {q1})))").alias(f"hi::{c}")
-            )
+            aggs.append(f"({q1} - ({cut} * ({q3} - {q1}))) AS {lo}")
+            aggs.append(f"({q3} + ({cut} * ({q3} - {q1}))) AS {hi}")
         else:
             raise ValueError("method must be 'gaussian' or 'iqr'")
-    return df.agg(*aggs)
+    return df.selectExpr(*aggs)
 
 
 def outlier_counts(
@@ -508,7 +508,7 @@ def outlier_counts(
     joined = cf.df.crossJoin(F.broadcast(bounds))
     aggs = [
         F.sum(
-            ((qcol(c) < F.col(f"`lo::{c}`")) | (qcol(c) > F.col(f"`hi::{c}`"))).cast("long")
+            ((qcol(c) < qcol("lo::" + c)) | (qcol(c) > qcol("hi::" + c))).cast("long")
         ).alias(c)
         for c in cols
     ]
@@ -567,14 +567,14 @@ def outlier_bounds_check(
             eager=False, storageLevel=StorageLevel.DISK_ONLY
         )
     approx = _outlier_bounds(cf.df, cols, method, cutoff, exact=False).select(
-        *[F.col(f"`lo::{c}`").alias(f"alo::{c}") for c in cols],
-        *[F.col(f"`hi::{c}`").alias(f"ahi::{c}") for c in cols],
+        *[qcol("lo::" + c).alias(f"alo::{c}") for c in cols],
+        *[qcol("hi::" + c).alias(f"ahi::{c}") for c in cols],
     )
     row = exact.crossJoin(approx)
     structs = []
     for c in cols:
-        lo, hi = F.col(f"`lo::{c}`"), F.col(f"`hi::{c}`")
-        alo, ahi = F.col(f"`alo::{c}`"), F.col(f"`ahi::{c}`")
+        lo, hi = qcol("lo::" + c), qcol("hi::" + c)
+        alo, ahi = qcol("alo::" + c), qcol("ahi::" + c)
         slack = F.lit(float(tol)) * (hi - lo)
         structs.append(
             F.struct(
@@ -598,7 +598,7 @@ def outlier_bounds_check(
         aggs = [
             F.sum(
                 (
-                    (qcol(c) < F.col(f"`lo::{c}`")) | (qcol(c) > F.col(f"`hi::{c}`"))
+                    (qcol(c) < qcol("lo::" + c)) | (qcol(c) > qcol("hi::" + c))
                 ).cast("long")
             ).alias(c)
             for c in cols
@@ -642,7 +642,7 @@ def clip_outliers(
             (
                 F.when(qcol(c).isNull(), F.lit(None))
                 .otherwise(
-                    F.greatest(F.least(qcol(c), F.col(f"`hi::{c}`")), F.col(f"`lo::{c}`"))
+                    F.greatest(F.least(qcol(c), qcol("hi::" + c)), qcol("lo::" + c))
                 )
                 .alias(c)
                 if c in colset
@@ -688,7 +688,7 @@ def transform(cf: ClariteFrame, transform_method, skip=None, only=None) -> Clari
         joined = cf.df.crossJoin(F.broadcast(stats))
         new_df = joined.select(
             *[
-                ((qcol(c) - F.col(f"`mu::{c}`")) / F.col(f"`sd::{c}`")).alias(c)
+                ((qcol(c) - qcol("mu::" + c)) / qcol("sd::" + c)).alias(c)
                 if c in set(cols)
                 else qcol(c)
                 for c in cf.df.columns

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from clarite_python_spark.catalog import qname
+
 __all__ = [
     "cosine",
     "cosine_topk",
@@ -325,7 +327,7 @@ def quantize_binary(
     # Column-API build of the same tree costs ~100 py4j round trips
     # (32 literal bit-powers + the two fold lambdas) per call, and the
     # binary family constructs this 2-3x per query
-    v_sql = "`" + vec_col.replace("`", "``") + "`"
+    v_sql = qname(vec_col)
     pows_sql = "array(" + ", ".join(f"CAST({p} AS BIGINT)" for p in _BIT_POWS) + ")"
     word_sql = (
         f"aggregate(sequence((w * 32), least(((w * 32) + 31), {dim - 1})), "
@@ -1465,7 +1467,7 @@ def _knn_cell_topk_pandas(
     return (
         left.groupBy("__list")
         .cogroup(right.groupBy("__list"))
-        .applyInPandas(lambda lg, rg: score(lg, rg), schema=out_schema)
+        .applyInPandas(score, schema=out_schema)
     )
 
 

@@ -36,6 +36,13 @@ def spark():
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # spark.driver.memory only takes effect when this fixture launches the
+    # JVM; if a session already existed it silently keeps the old heap and
+    # the scale pins can OOM at local[8] — fail loudly instead
+    assert s.sparkContext.getConf().get("spark.driver.memory") == "6g", (
+        "spark.driver.memory is not 6g: a SparkSession was started before the "
+        "test fixture, so its settings did not apply"
+    )
     yield s
     s.stop()
 

@@ -344,7 +344,7 @@ def test_custom_regression_kernel(ewas_cf):
     from clarite_python_spark.operators import analyze as an
 
     def factory(outcome, covariates, covar_types, rv_types, family, min_n, rcb):
-        def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             rv = key[0]
             sub = pdf[[outcome, "value"]].dropna()
             r = sub[outcome].astype(float).corr(pd.to_numeric(sub["value"]))
