@@ -10,8 +10,9 @@ This package re-expresses those semantics Spark-first:
 - lazy ``pyspark.sql.DataFrame`` plans everywhere (Catalyst prunes/pushes),
 - a ``VariableCatalog`` carrying the CLARITE semantic type taxonomy
   (constant/binary/categorical/continuous/unknown) per column,
-- the statistical fan-out as ``unpivot -> groupBy(variable) ->
-  applyInPandas(numpy GLM kernel)`` with broadcast design constants,
+- the statistical fan-out as batched aggregations plus a
+  ``groupBy(variable block) -> applyInPandas(numpy GLM kernel)`` tail
+  with broadcast design constants,
 - batched single-pass aggregations for every column-statistic operator
   (one scan regardless of column count),
 - plus large-scale training-data-pipeline extensions: dedup (exact /

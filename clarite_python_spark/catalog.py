@@ -72,6 +72,14 @@ def qcol(name: str) -> F.Column:
     return F.col(qname(name))
 
 
+def select_positional(df: DataFrame, names: Sequence[str]) -> DataFrame:
+    """``names`` under the positional aliases ``_0, _1, …``, in one
+    ``selectExpr``. ``mapInPandas`` re-resolves its input columns by name,
+    which parses dots and backticks; its batches get the real names back
+    with ``pdf.set_axis(names, axis=1)``."""
+    return df.selectExpr(*[f"{qname(c)} AS _{i}" for i, c in enumerate(names)])
+
+
 def sort_result(df: DataFrame, *order) -> DataFrame:
     """Sort a small result frame (one row per tested variable or pair,
     at most ~10^6 rows) on ONE partition.

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol, qname
+from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol, select_positional
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 
 __all__ = ["gaussian_assoc_rows", "gaussian_interaction_rows"]
@@ -195,12 +195,7 @@ def _collect_unit_stats(
                 out[f"uu{am}_{bm}"] = rect_uu[:, am, bm]
             yield pd.DataFrame(out)
 
-    # positional aliases: mapInPandas re-resolves its input columns by
-    # name, which parses dots and backticks; the batches get the real
-    # names back in ``partials``
-    partial_df = df.selectExpr(
-        *[f"{qname(c)} AS _{i}" for i, c in enumerate(need)]
-    ).mapInPandas(partials, out_schema)
+    partial_df = select_positional(df, need).mapInPandas(partials, out_schema)
     reduced = (
         partial_df.groupBy("unit")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])

@@ -265,7 +265,12 @@ def weighted_binomial_cells_rows(
             wnorm_expr.alias("__w"),
             *val_cols,
         ).unpivot(
-            [outcome, *covariates, "__g", "__wmiss", "__w"], batch, "variable", "value"
+            # the values default to every non-id column, i.e. exactly
+            # ``batch``: a name list would be parsed (dots, backticks)
+            [qcol(c) for c in [outcome, *covariates, "__g", "__wmiss", "__w"]],
+            None,
+            "variable",
+            "value",
         )
         cells_df = (
             long.groupBy("variable", "value", outcome, *covariates, "__g", "__wmiss")

@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol
+from clarite_python_spark.catalog import BINARY, CATEGORICAL, select_positional
 from clarite_python_spark.functions.distributions import t_sf
 from clarite_python_spark.functions.wglm import _center_strata
 
@@ -159,6 +159,7 @@ def _irls_scan(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            pdf = pdf.set_axis(need, axis=1)
             st = _row_state(
                 pdf, outcome, cov_list, cov_types, lvs, value_cols,
                 weight_col, weight_mean, subset_col,
@@ -220,7 +221,7 @@ def _irls_scan(
         if strat_col is not None:
             need.append(strat_col)
     reduced = (
-        df.select(*[qcol(c).alias(c) for c in need])
+        select_positional(df, need)
         .mapInPandas(partials, out_schema)
         .groupBy("unit")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])
@@ -286,6 +287,7 @@ def _score_scan(
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
+            pdf = pdf.set_axis(need, axis=1)
             st = _row_state(
                 pdf, outcome, cov_list, cov_types, lvs, fit_rvs,
                 weight_col, weight_mean, subset_col,
@@ -328,7 +330,7 @@ def _score_scan(
     if weight_col is not None:
         need.append(weight_col)
     reduced = (
-        df.select(*[qcol(c).alias(c) for c in need])
+        select_positional(df, need)
         .mapInPandas(partials, out_schema)
         .groupBy("unit", "clust")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clarite_python_spark.catalog import BINARY, CATEGORICAL, qcol
+from clarite_python_spark.catalog import BINARY, CATEGORICAL, select_positional
 from clarite_python_spark.functions.distributions import t_sf
 from clarite_python_spark.functions.wglm import _center_strata
 
@@ -100,6 +100,7 @@ def _grams_reduced(
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
+            pdf = pdf.set_axis(need, axis=1)
             c_design, c_ok = _covariate_frame(pdf, cov_list, cov_types, lvs)
             y = pd.to_numeric(pdf[outcome]).to_numpy(dtype=float)
             base_ok = c_ok & ~np.isnan(y)
@@ -193,10 +194,7 @@ def _grams_reduced(
         need.append(group_col)
     if weight_col is not None:
         need.append(weight_col)
-    # design columns carry __-prefixed names that must stay verbatim
-    partial_df = df.select(*[qcol(c).alias(c) for c in need]).mapInPandas(
-        partials, out_schema
-    )
+    partial_df = select_positional(df, need).mapInPandas(partials, out_schema)
     reduced = (
         partial_df.groupBy("unit", "clust")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])
@@ -431,6 +429,7 @@ def _score2_reduced(
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
+            pdf = pdf.set_axis(need, axis=1)
             c_design, c_ok = _covariate_frame(pdf, cov_list, cov_types, lvs)
             y = pd.to_numeric(pdf[outcome]).to_numpy(dtype=float)
             base_ok = c_ok & ~np.isnan(y)
@@ -490,9 +489,7 @@ def _score2_reduced(
         need.append(group_col)
     if weight_col is not None:
         need.append(weight_col)
-    partial_df = df.select(*[qcol(c).alias(c) for c in need]).mapInPandas(
-        partials, out_schema
-    )
+    partial_df = select_positional(df, need).mapInPandas(partials, out_schema)
     reduced = (
         partial_df.groupBy("unit", "clust")
         .agg(*[F.sum(f"`{c}`").alias(c) for c in stat_cols])

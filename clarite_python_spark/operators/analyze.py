@@ -5,25 +5,34 @@
 pair over a single wide table. The reference iterates variables in one
 process (its multiprocessing pool is force-disabled,
 ``glm_regression.py:400-401``); here the designed per-variable
-independence becomes the distributed axis:
+independence becomes the distributed axis. Fits with closed forms or
+small value domains run as batched aggregations (``functions/olsagg``,
+``binomagg``, ``wolsagg``, ``wbinomagg``, ``wbinomirls``); the rest take
+the grouped tail, laid out in variable blocks:
 
-    wide df --unpivot(RV cols)--> long (ID, outcome, covars..., variable, value)
-        --groupBy("variable").applyInPandas(numpy GLM kernel)--> result rows
-        --repartition(1).sortWithinPartitions(pvalue)
+    wide df --posexplode(array(array(block 0 values), array(block 1 ...)))-->
+        (ID, outcome, covars..., __block, __values: array<string>)
+        --groupBy("__block").applyInPandas(per-variable numpy GLM kernel,
+                                            once per variable of the block)
+        --> result rows --repartition(1).sortWithinPartitions(pvalue)
 
-The unpivot is a Catalyst ``Expand`` (one scan); the only shuffle keys on
-``variable``, so each reducer handles ~|rows| values — the correct layout
-up to ~10^7 rows/group. The result (one row per variable, <=10^6 rows) is
-sorted on ONE partition (``catalog.sort_result``): a global ``orderBy``
-would plan a range exchange whose sampling job runs the whole fan-out a
-second time. The melt's projection is rendered as one ``selectExpr``
-parse, not one ``Column`` per variable (py4j round trips).
+Each row ships once per block (rows x blocks records, not one per
+(row, variable)): the blocks are round-robin slices of the variables,
+``max(4 x defaultParallelism, ceil(variables / 64))`` of them (at most
+one per variable), so a block's kernel task holds rows x <=64 string
+values in Python. The kernels see the per-variable long form
+unchanged — key ``(variable,)``, the id columns plus ``variable`` and
+``value`` — with the values cast to strings in one ``selectExpr``
+parse. The result (one row per variable, <=10^6 rows) is sorted on ONE
+partition (``catalog.sort_result``): a global ``orderBy`` would plan a
+range exchange whose sampling job runs the whole fan-out a second time.
 
-Beyond ~10^7 rows/group (100-TB regime) a columnar strategy —
-one Spark ML ``GeneralizedLinearRegression`` job per variable scheduled
-from a driver thread pool over column-sliced DataFrames — keeps the same
-result schema; the melt path is the default because EWAS tables are wide
-(10^3 columns) and short-ish per group.
+When one block's rows x 64 values outgrow a Python worker (the 100-TB
+regime), ``strategy="columnar"`` — one Spark ML
+``GeneralizedLinearRegression`` job per variable scheduled from a driver
+thread pool over column-sliced DataFrames — keeps the same result
+schema; the block layout is the default because EWAS tables are wide
+(10^3 columns) and short-ish.
 
 Kernel inputs that are identical across groups (covariate types/levels,
 family, min_n) ride along as a tiny closure-captured dict (broadcast by
@@ -32,6 +41,7 @@ task serialization, ≈KBs).
 
 from __future__ import annotations
 
+import math
 import warnings
 from itertools import combinations
 from typing import Mapping, Sequence
@@ -87,6 +97,10 @@ __all__ = [
 # in-pandas delete-1 replicates (ONE scan, per-variable numpy refits)
 # are the cheaper engine and the routing falls back to it.
 JK_IRLS_MAX_UNITS = 4096
+
+# Widest variable block of the grouped tail: a block's kernel task holds
+# rows x this many string values in Python.
+BLOCK_WIDTH = 64
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -183,7 +197,13 @@ def _make_assoc_kernel(
     min_n: int,
     report_categorical_betas: bool,
 ):
-    """Build the applyInPandas kernel for one outcome's fan-out.
+    """Build the per-variable kernel for one outcome's grouped tail.
+
+    The kernel takes key ``(rv,)`` and a pdf of the id columns plus
+    ``variable`` and ``value`` (``rv``'s values as strings, ``None`` for
+    nulls). ``_block_kernel`` calls it once per variable of a block, on
+    the block's rows: a block task holds rows x <=64 (``BLOCK_WIDTH``)
+    values.
 
     Mirrors the reference per-RV flow (_run_rv, glm_regression.py:450-565):
     complete-case mask -> min_n gate -> drop non-varying covariates ->
@@ -269,7 +289,9 @@ def _make_assoc_kernel(
                 raise ValueError(f"unsupported regression variable type {vtype!r}")
         except Exception:
             rows = [_default_row(rv, outcome)]
-        out = pd.DataFrame(rows)
+        # no rows when report_categorical_betas finds no level to report
+        # (a single-level categorical), as in the weighted kernel
+        out = pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
         out["N"] = out["N"].astype("Int64")
         return out[[f.name for f in RESULT_SCHEMA.fields]]
 
@@ -343,11 +365,41 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def _variable_blocks(group: list[str], parallelism: int) -> list[list[str]]:
+    """Split the grouped tail's variables into round-robin blocks: at least
+    ``4 x parallelism`` of them (so every core gets several kernel tasks)
+    and at most ``BLOCK_WIDTH`` variables wide. Round-robin spreads the
+    two-fit categorical variables evenly over the blocks."""
+    n_blocks = min(len(group), max(4 * parallelism, math.ceil(len(group) / BLOCK_WIDTH)))
+    return [group[k::n_blocks] for k in range(n_blocks)]
+
+
+def _block_kernel(kernel, id_vars: list[str], blocks: list[list[str]]):
+    """Adapt a per-variable kernel (key ``(rv,)``; pdf = id columns +
+    ``variable`` + ``value``) to one variable block: the block's string
+    values arrive as one array per row and each variable's column is
+    handed to ``kernel`` exactly as the long form carried it."""
+
+    def block_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        names = blocks[key[0]]
+        vals = np.stack(pdf["__values"].to_numpy())
+        ids = pdf[id_vars]
+        parts = [
+            kernel((rv,), ids.assign(variable=rv, value=vals[:, j]))
+            for j, rv in enumerate(names)
+        ]
+        # a kernel may report no rows for a variable; leaving those parts
+        # out keeps pandas from warning about empty-frame dtypes
+        return pd.concat([p for p in parts if len(p)] or parts[:1], ignore_index=True)
+
+    return block_kernel
+
+
 def _sorted_levels(values: pd.Series) -> list:
     """Distinct non-NA values, sorted numerically when every value parses
     as a number, else lexically — matching pandas' sorted category levels
     (values keep their original numeric order in the reference even
-    though our melt carries them as strings)."""
+    though the grouped tail carries them as strings)."""
     lv = values.dropna().unique().tolist()
     try:
         return sorted(lv, key=float)
@@ -636,8 +688,8 @@ def association_study(
     the linearized sandwich vcov + survey dof (+ working-LRT for
     categorical variables).
 
-    ``strategy``: ``"grouped"`` (default) = melt +
-    ``groupBy(variable).applyInPandas`` — right for wide/short EWAS
+    ``strategy``: ``"grouped"`` (default) = batched aggregations plus
+    ``groupBy(variable block).applyInPandas`` — right for wide/short EWAS
     tables; ``"columnar"`` = one distributed ML-GLM job per variable
     scheduled from a driver thread pool (``max_concurrent_jobs``) — the
     100-TB path where a variable's rows exceed one worker's memory
@@ -794,8 +846,8 @@ def association_study(
             kernel = _make_assoc_kernel(
                 outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
             )
-        # ONE unpivot covering every variable type: values ride as strings
-        # (int->"1", double keeps its repr) and the kernels recover
+        # ONE block layout covering every variable type: values ride as
+        # strings (int->"1", double keeps its repr) and the kernels recover
         # numerics with pd.to_numeric — one scan instead of one per type
         # group, which matters when the table is the expensive input.
         group = [v for v in my_rvs if rv_types[v] in (CONTINUOUS, BINARY, CATEGORICAL)]
@@ -824,7 +876,7 @@ def association_study(
             # closed-form: per-(variable, cluster) weighted sufficient
             # statistics feed both the fit and the linearized sandwich
             # (functions/wolsagg.py) — one mapInPandas scan instead of
-            # melting data rows through per-variable Python groups. The
+            # shipping data rows through per-variable Python groups. The
             # accumulator is a sort + segment-sum, O(batch x p) per stat
             # and independent of #clusters; the gate only bounds the
             # DRIVER-side (#clusters x zdim^2) sandwich assembly (16k
@@ -870,7 +922,7 @@ def association_study(
             # running them inline: each is an independent Spark job, and
             # the grouped-kernel tail below is another — submitting them
             # together from a driver thread pool lets the categorical
-            # variables' melt/fit job overlap the Gram passes instead of
+            # variables' fit job overlap the Gram passes instead of
             # following them (guide §2.6; measured serial: 1.1 s Gram
             # collect + 2.3 s grouped job back-to-back at sf0.1). The
             # closures and the result-frame union order are identical to
@@ -932,7 +984,7 @@ def association_study(
             # CLUSTER): frequency-weighted IRLS reproduces the kernel's
             # iterates exactly and per-cluster score sums feed the same
             # sandwich algebra (functions/wbinomagg.py) — one codegen
-            # count/sum aggregation instead of melting data rows through
+            # count/sum aggregation instead of shipping data rows through
             # per-variable Python groups. Discrete-domain variables only
             # (binary/categorical, or genotype-encoded continuous);
             # everything else stays on the grouped kernel below.
@@ -1034,7 +1086,7 @@ def association_study(
             # IRLS — one shuffle-free scan per iteration batched over all
             # unconverged variables, then per-cluster score sums for the
             # linearized sandwich (functions/wbinomirls.py). This closes
-            # the last weighted scale cliff: these fits previously melted
+            # the last weighted scale cliff: these fits previously shipped
             # rows x variables through the grouped kernel.
             from clarite_python_spark.functions.wbinomirls import (
                 weighted_binomial_irls_rows,
@@ -1104,7 +1156,7 @@ def association_study(
             # masked-sum pass covers continuous variables (Wald t),
             # binary variables (Wald on the treatment dummy) and
             # categorical variables (LRT vs the restricted sub-block of
-            # the same Gram) — no melt, no shuffle of data rows, no
+            # the same Gram) — no shuffle of data rows, no
             # Python groups (functions/olsagg.py; ~20x the kernel at the
             # reference's canonical 22.6k x 970 shape). Variables whose
             # complete-case level set differs from the catalog's fall
@@ -1143,7 +1195,7 @@ def association_study(
             # Binomial fits collapse to contingency cells when the
             # variable and all covariates have small value domains (GWAS
             # genotypes: 3 values) — ONE count aggregation replaces the
-            # per-variable melt+shuffle, then frequency-weighted IRLS
+            # grouped tail's shuffle of data rows, then frequency-weighted IRLS
             # (identical iterates to the row-level kernel) runs
             # driver-side per variable (functions/binomagg.py). Variables
             # with wide domains or continuous covariates fall back to the
@@ -1170,14 +1222,21 @@ def association_study(
                 )
         grouped_res = None
         if group:
-            # ONE selectExpr parse; the unpivot's values default to every
-            # non-id column, i.e. exactly ``group`` in order
-            long = df.selectExpr(
+            # ONE selectExpr parse: each row ships once per variable
+            # block, that block's values in one array<string>
+            blocks = _variable_blocks(
+                group, df.sparkSession.sparkContext.defaultParallelism
+            )
+            arrays = ", ".join(
+                "array(" + ", ".join(f"CAST({qname(v)} AS STRING)" for v in b) + ")"
+                for b in blocks
+            )
+            wide = df.selectExpr(
                 *[qname(c) for c in id_vars],
-                *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in group],
-            ).unpivot([qcol(c) for c in id_vars], None, "variable", "value")
-            grouped_res = long.groupBy("variable").applyInPandas(
-                kernel, RESULT_SCHEMA
+                f"posexplode(array({arrays})) AS (__block, __values)",
+            )
+            grouped_res = wide.groupBy("__block").applyInPandas(
+                _block_kernel(kernel, id_vars, blocks), RESULT_SCHEMA
             )
         if deferred_gauss_slot is not None:
             # resolve the deferred suffstats passes, overlapping them

@@ -1,8 +1,9 @@
 """Columnar (100-TB) execution strategy for the association study.
 
-The default grouped strategy melts to ``groupBy(variable).applyInPandas``
-— each variable's group is the FULL row count, which breaks past ~10^7
-rows/group (one Python worker must hold it; SURVEY.md §7 risk #4). This
+The default grouped strategy ships rows in variable blocks to
+``groupBy(block).applyInPandas`` — each block's group is the FULL row
+count x <=64 values, which breaks past ~10^7 rows (one Python worker
+must hold it; SURVEY.md §7 risk #4). This
 module keeps the same result schema but fits each variable with
 ``pyspark.ml.regression.GeneralizedLinearRegression`` — a distributed
 JVM-side IRLS over a column-sliced DataFrame — so no executor ever

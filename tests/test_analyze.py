@@ -1,7 +1,7 @@
 """association_study / interaction_study / add_corrected_pvalues contracts.
 
 The numeric oracle is a driver-side numpy fit over the same pandas data —
-i.e. the distributed melt+applyInPandas fan-out must reproduce the
+i.e. the distributed applyInPandas fan-out must reproduce the
 single-machine math exactly."""
 
 import numpy as np

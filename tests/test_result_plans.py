@@ -2,7 +2,7 @@
 
 - Result frames are sorted on ONE partition: no final executed plan has a
   range-partitioned exchange, whose sampling job would run the whole
-  fan-out (melt + Python kernel) a second time.
+  fan-out (block layout + Python kernel) a second time.
 - Wide per-column plans are built as one SQL parse: the py4j round trips
   spent building a frame grow at most linearly, with a small constant, in
   the number of variables.
@@ -19,6 +19,7 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from clarite_python_spark.catalog import ClariteFrame, VariableCatalog
 from clarite_python_spark.functions.blockcorr import block_correlations
@@ -250,3 +251,125 @@ def test_blockcorr_rejects_duplicate_names(spark):
     df = spark.createDataFrame(pd.DataFrame({"v0": [1.0, 2.0, 3.0], "v1": [3.0, 1.0, 2.0]}))
     with pytest.raises(ValueError, match="duplicate"):
         block_correlations(df, ["v0", "v1", "v0"])
+
+
+def _survey_parts(spark, names: dict[str, str]):
+    """A study frame and its design: two continuous variables (the closed-form
+    weighted Gaussian and distributed weighted IRLS paths) and a categorical
+    one (the grouped weighted kernel), named through ``names``."""
+    rng = np.random.RandomState(17)
+    n = 400
+    strat = np.repeat(np.arange(8), n // 8)
+    psu = strat * 2 + rng.randint(0, 2, n)
+    sex = rng.choice(["F", "M"], n)
+    x1 = rng.randn(n)
+    pdf = pd.DataFrame(
+        {
+            "ID": np.arange(n),
+            "y": 1.5 * x1 + (sex == "M") + rng.randn(n),
+            "yb": np.where(rng.rand(n) < 1 / (1 + np.exp(-x1)), "Case", "Control"),
+            "sex": sex,
+            names["a_b"]: x1,
+            names["c_d"]: rng.randn(n),
+            names["k_k"]: rng.choice(["p", "q", "r"], n),
+        }
+    )
+    pdf.loc[rng.choice(n, 20, replace=False), names["a_b"]] = None
+    design = pd.DataFrame(
+        {"ID": np.arange(n), "strat": strat, "psu": psu, "w": rng.uniform(0.5, 2.0, n)}
+    )
+    cat = VariableCatalog(
+        types={
+            "y": "continuous",
+            "yb": "binary",
+            "sex": "binary",
+            names["a_b"]: "continuous",
+            names["c_d"]: "continuous",
+            names["k_k"]: "categorical",
+        },
+        categories={"yb": ["Case", "Control"], "sex": ["F", "M"], names["k_k"]: ["p", "q", "r"]},
+    )
+    return ClariteFrame(spark.createDataFrame(pdf), cat), spark.createDataFrame(design)
+
+
+def _survey_results(spark, names: dict[str, str]) -> pd.DataFrame:
+    from clarite_python_spark.survey import SurveyDesignSpec
+
+    cf, design_df = _survey_parts(spark, names)
+    designs = {
+        "cluster": SurveyDesignSpec(design_df, strata="strat", cluster="psu", nest=True, weights="w"),
+        "strata": SurveyDesignSpec(design_df, strata="strat", weights="w"),
+    }
+    parts = []
+    for label, design in designs.items():
+        for outcome in ("y", "yb"):
+            res = analyze.association_study(
+                cf,
+                outcomes=outcome,
+                regression_variables=list(names.values()),
+                covariates=["sex"],
+                survey_design_spec=design,
+                min_n=50,
+            ).toPandas()
+            parts.append(res.assign(design=label))
+    back = {v: k for k, v in names.items()}
+    out = pd.concat(parts, ignore_index=True).replace({"Variable": back})
+    return out.sort_values(["design", "Outcome", "Variable"]).reset_index(drop=True)
+
+
+def test_quoted_names_match_plain_names_survey(spark):
+    plain = {"a_b": "a_b", "c_d": "c_d", "k_k": "k_k"}
+    odd = {"a_b": "a.b", "c_d": "c`d", "k_k": "k.k"}
+    want = _survey_results(spark, plain)
+    got = _survey_results(spark, odd)
+    assert len(want) == 12 and want["Converged"].all()
+    pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-9)
+
+
+# ---- grouped fan-out layout ---------------------------------------------------
+
+
+def _shuffle_write_records(spark, action) -> list[int]:
+    """Run ``action`` and return the shuffle-write record count of every
+    stage of the jobs it ran, read from the status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    dag, store = jsc.dagScheduler(), jsc.statusStore()
+    job0 = dag.nextJobId()
+    action()
+    job1 = dag.nextJobId()
+    jsc.listenerBus().waitUntilEmpty()
+    stages = set()
+    for jid in range(job0, job1):
+        ids = store.job(jid).stageIds()
+        stages.update(ids.apply(i) for i in range(ids.size()))
+    records = []
+    for sid in stages:
+        try:
+            records.append(store.lastStageAttempt(sid).shuffleWriteRecords())
+        except Py4JJavaError:  # a skipped stage never ran and has no attempt
+            continue
+    return records
+
+
+def test_grouped_fan_out_ships_each_row_once_per_block(spark):
+    """The grouped tail shuffles rows x blocks records, not one record per
+    (row, variable)."""
+    rng = np.random.RandomState(23)
+    n, p = 2000, 60
+    cols = {"ID": np.arange(n), "yb": rng.choice(["Case", "Control"], n), "age": rng.randn(n)}
+    types = {"yb": "binary", "age": "continuous"}
+    for i in range(p):
+        cols[f"v{i}"] = rng.randn(n)
+        types[f"v{i}"] = "continuous"
+    cf = ClariteFrame(
+        spark.createDataFrame(pd.DataFrame(cols)),
+        VariableCatalog(types=types, categories={"yb": ["Case", "Control"]}),
+    )
+    res = analyze.association_study(cf, outcomes="yb", covariates=["age"], min_n=10)
+    rows: list = []
+    records = _shuffle_write_records(spark, lambda: rows.extend(res.collect()))
+    assert len(rows) == p
+    # four blocks per core, each at most 64 variables wide
+    n_blocks = min(p, max(4 * spark.sparkContext.defaultParallelism, math.ceil(p / 64)))
+    assert n_blocks < p
+    assert max(records) <= n * n_blocks, (records, n_blocks)
