@@ -86,11 +86,11 @@ def sort_result(df: DataFrame, *order) -> DataFrame:
 
     A global ``orderBy`` plans a range-partitioned exchange whose
     partitioner first runs a sampling job over the sort's input — for a
-    result frame that input is the whole fan-out (melt + Python kernel),
-    which would then run twice. ``repartition(1)`` plans a single-partition
-    exchange with no sampling job, and the sort stays a per-partition
-    sort. (Not ``coalesce(1)``: that would push one-task parallelism down
-    into the kernel's stage.)"""
+    result frame that input is the whole fan-out (block layout + Python
+    kernel), which would then run twice. ``repartition(1)`` plans a
+    single-partition exchange with no sampling job, and the sort stays a
+    per-partition sort. (Not ``coalesce(1)``: that would push one-task
+    parallelism down into the kernel's stage.)"""
     return df.repartition(1).sortWithinPartitions(*order)
 
 

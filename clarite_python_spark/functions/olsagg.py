@@ -1,5 +1,5 @@
 """Sufficient-statistics OLS: Gaussian fits as one vectorized pass
-(no melt, no per-variable Python groups).
+(no shuffle of data rows, no per-variable Python groups).
 
 For a Gaussian outcome every fit here is ordinary least squares, so all
 a fit needs is masked sums of products. The engine works on "units" —
@@ -24,9 +24,10 @@ emits |units| tiny rows; a groupBy-sum reduction collects to the driver,
 which solves each unit's normal equations and produces Wald t / LRT
 statistics.
 
-Why not the grouped pandas kernel: the melt ships |rows| x |units| long
-rows through a shuffle into Python workers (measured ~18 fits/s at the
-reference's canonical 22.6k x 970 EWAS; this path measures ~123/s).
+Why not the grouped pandas kernel: it ships every data row through a
+shuffle into Python workers and fits one variable at a time there
+(measured ~18 fits/s at the reference's canonical 22.6k x 970 EWAS,
+when it shipped one row per (row, unit); this path measures ~123/s).
 Why not aggregate expressions: |units| x ~20 masked-sum expressions blow
 up Catalyst codegen superlinearly (measured 64 s for one 128-variable
 chunk). Numerics match the numpy kernels (same normal equations).
@@ -371,7 +372,7 @@ def gaussian_interaction_rows(
 
 
 def _kernel_sorted_levels(raw: Sequence) -> list:
-    """Order levels the way the grouped kernel does on melt strings
+    """Order levels the way the grouped kernel does on its string values
     (numeric when every value parses as a number, else lexical,
     analyze._sorted_levels) — applied to the RAW values so dummy
     comparisons stay in the column's native type."""

@@ -21,10 +21,11 @@ exact too — per-cluster score sums are additive over a cluster's cells:
             (#clusters x p) J matrix (mirrors wolsagg.py:244-264).
 
 So ONE unpivot -> count/sum aggregation (whole-stage codegen, map-side
-combine) replaces the melt + per-variable Python groups; the shuffle
-carries O(#vars x |cells| x #clusters) tiny rows and the per-variable
-IRLS runs driver-side in microseconds. #clusters is bounded by the
-sampling frame (caller gates at <=256), so this is scan-bound at any
+combine) replaces the grouped tail's shuffle of data rows and
+per-variable Python groups; the shuffle carries O(#vars x |cells| x
+#clusters) tiny rows and the per-variable IRLS runs driver-side in
+microseconds. #clusters is bounded by the sampling frame (the caller
+gates at ``analyze.SURVEY_MAX_UNITS``), so this is scan-bound at any
 data size — the designed 100-TB path for survey-weighted case/control
 GWAS (3-valued genotypes x ~60 NHANES PSUs ~ 360 cells/variant).
 
@@ -43,8 +44,8 @@ STRATUM instead of the cluster and the same one-pass aggregation serves
 all design shapes.
 
 Eligibility (caller falls back to the grouped kernel otherwise):
-- stata (linearized) vcov; bounded design (<=256 clusters, or <=1024
-  strata for no-cluster designs);
+- a design of at most ``analyze.SURVEY_MAX_UNITS`` clusters (strata
+  for no-cluster designs);
 - all covariates BINARY/CATEGORICAL;
 - variable BINARY/CATEGORICAL, or CONTINUOUS with a known-small domain
   (encoded genotypes); cell blowup past ``max_cells`` re-checked exactly

@@ -1,8 +1,8 @@
 """Survey-weighted BINOMIAL fits for CONTINUOUS variables via
 distributed IRLS — closes the last weighted scale cliff.
 
-The grouped kernel melts rows x variables through per-variable Python
-groups, which breaks past ~1e7 rows/variable; the cell path
+The grouped kernel ships data rows through per-variable Python groups,
+which breaks past ~1e7 rows/variable; the cell path
 (functions/wbinomagg.py) needs small value domains.  Continuous RVs in a
 weighted logistic study previously had no scale path (documented cliff,
 SCALE.md).  This module is that path:
@@ -26,7 +26,7 @@ SCALE.md).  This module is that path:
 Every scan is shuffle-free over data rows (map-side partial sums + a
 tiny groupBy over #vars x #groups stat rows); deviance converges in
 ~5-15 iterations, so total cost is a bounded number of scans at any
-data size — no melt, no rows x vars shuffle, no driver-side cell lists.
+data size — no shuffle of data rows, no driver-side cell lists.
 
 Reference semantics: ``weighted_glm_regression.py:140-194`` (fit +
 Wald), ``survey_model.py:105-171`` (linearized variance),

@@ -12,16 +12,16 @@ v's complete-case-and-subset mask m:
     then the same stratum-centering / lonely-PSU / fpc algebra as the
     kernel (functions/wglm.py) on the tiny (#clusters x p) J matrix.
 
-So ONE mapInPandas pass over the wide table replaces the melt +
-per-variable Python groups. Per-cluster accumulation is a sort +
-``np.add.reduceat`` segment sum — O(batch x p) per statistic and
-independent of #clusters (the dense one-hot matmul this replaced was
-what capped the path at ~256 clusters) — and each batch emits rows only
-for clusters it actually contains, so the shuffle carries
-|vars| x |present clusters| x ~20 doubles. #clusters is bounded by the
-sampling frame, so this is scan-bound at any data size; the dispatch
-gate (analyze.py, 16,384) only bounds the driver-side sandwich
-assembly.
+So ONE mapInPandas pass over the wide table replaces the grouped
+tail's shuffle of data rows and per-variable Python groups. Per-cluster
+accumulation is a sort + ``np.add.reduceat`` segment sum — O(batch x p)
+per statistic and independent of #clusters (the dense one-hot matmul
+this replaced was what capped the path at ~256 clusters) — and each
+batch emits rows only for clusters it actually contains, so the shuffle
+carries |vars| x |present clusters| x ~20 doubles. #clusters is bounded
+by the sampling frame, so this is scan-bound at any data size; the
+dispatch gate (``analyze.SURVEY_MAX_UNITS``) only bounds the
+driver-side sandwich assembly.
 
 Cluster designs need ONE scan (per-cluster Grams determine the
 sandwich). No-cluster designs — where every observation is its own

@@ -5,10 +5,32 @@
 pair over a single wide table. The reference iterates variables in one
 process (its multiprocessing pool is force-disabled,
 ``glm_regression.py:400-401``); here the designed per-variable
-independence becomes the distributed axis. Fits with closed forms or
-small value domains run as batched aggregations (``functions/olsagg``,
-``binomagg``, ``wolsagg``, ``wbinomagg``, ``wbinomirls``); the rest take
-the grouped tail, laid out in variable blocks:
+independence becomes the distributed axis. Per outcome, the variables
+pass through a chain of batched routes: each takes the variables it can
+fit from aggregations, returns their rows to the driver and hands the
+rest on. The grouped tail fits whatever is left, lazily:
+
+==========================  ========  ==================  ===================  ================
+route                       family    design              takes                leftovers go to
+==========================  ========  ==================  ===================  ================
+``olsagg``                  Gaussian  none                every variable       grouped tail
+``binomagg``                binomial  none                small value domains  grouped tail
+``wolsagg``                 Gaussian  survey [1]          continuous           grouped tail
+``wbinomagg`` cells         binomial  survey [1], [2]     binary, categorical, ``wbinomirls``
+                                                          genotype
+``wbinomirls``              binomial  survey [1], [2],    continuous           grouped tail
+                                      [3]
+grouped tail                any       any                 what is left         --
+==========================  ========  ==================  ===================  ================
+
+[1] at most ``SURVEY_MAX_UNITS`` PSUs (strata, without clusters);
+[2] binary/categorical covariates only; [3] a jackknife within the
+``JK_IRLS_MAX_UNITS`` budget. ``use_sufficient_stats=False`` or a
+custom ``regression_kind`` sends every variable to the grouped tail.
+Survey routes run once per weight group; a variable a per-variable
+weight mapping leaves out gets an all-NaN row.
+
+The grouped tail is laid out in variable blocks:
 
     wide df --posexplode(array(array(block 0 values), array(block 1 ...)))-->
         (ID, outcome, covars..., __block, __values: array<string>)
@@ -43,6 +65,7 @@ from __future__ import annotations
 
 import math
 import warnings
+from dataclasses import dataclass
 from itertools import combinations
 from typing import Mapping, Sequence
 
@@ -57,6 +80,7 @@ from clarite_python_spark.catalog import (
     CATEGORICAL,
     CONSTANT,
     CONTINUOUS,
+    GENOTYPES,
     ID_COL,
     UNKNOWN,
     ClariteFrame,
@@ -65,6 +89,7 @@ from clarite_python_spark.catalog import (
     qname,
     sort_result,
 )
+from clarite_python_spark.functions import binomagg, olsagg, wbinomagg, wbinomirls, wolsagg
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 from clarite_python_spark.functions.glm import (
     BINOMIAL,
@@ -79,6 +104,7 @@ from clarite_python_spark.functions.wglm import (
     sandwich_vcov,
     survey_dof,
 )
+from clarite_python_spark.survey.design import CLUST_COL, STRAT_COL, SUBSET_COL, _weight_col
 
 __all__ = [
     "association_study",
@@ -97,6 +123,13 @@ __all__ = [
 # in-pandas delete-1 replicates (ONE scan, per-variable numpy refits)
 # are the cheaper engine and the routing falls back to it.
 JK_IRLS_MAX_UNITS = 4096
+
+# Largest survey design the batched survey routes take, in PSUs (strata
+# when the design has no cluster): they assemble the sandwich on the
+# driver from one #units x params^2 score block (16k PSUs x a dozen
+# params ~ MBs); a larger design leaves every variable to the grouped
+# kernel.
+SURVEY_MAX_UNITS = 16384
 
 # Widest variable block of the grouped tail: a block's kernel task holds
 # rows x this many string values in Python.
@@ -309,7 +342,6 @@ def _encode_genotype_variables(
     column replaces the genotype in place and its CLARITE type becomes
     the encoded type (continuous, or categorical for codominant). Pure
     column expressions — the plan gains one projection, no UDF."""
-    from clarite_python_spark.catalog import GENOTYPES
     from clarite_python_spark.functions.genotypes import (
         KNOWN_ENCODINGS,
         edge_alphas,
@@ -459,13 +491,6 @@ def _make_weighted_kernel(
     ``"jackknife"`` = delete-1-cluster replicates (implemented but unused
     in the reference, survey_model.py:174-208).
     """
-    from clarite_python_spark.survey.design import (
-        CLUST_COL,
-        STRAT_COL,
-        SUBSET_COL,
-        _weight_col,
-    )
-
     has_strata = constants["has_strata"]
     has_cluster = constants["has_cluster"]
 
@@ -653,6 +678,220 @@ def _zscore_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+def _encode_outcome(data: ClariteFrame, df: DataFrame, outcome: str) -> tuple[DataFrame, str]:
+    """The outcome as the GLMs read it, and its family: a continuous
+    outcome cast to double (Gaussian), a binary one mapped to 0/1
+    (Binomial, ``_encode_binary_outcome``)."""
+    outcome_type = data.catalog.get(outcome)
+    if outcome_type == CONTINUOUS:
+        return df.withColumn(outcome, F.col(outcome).cast("double")), GAUSSIAN
+    if outcome_type == BINARY:
+        mapping = _encode_binary_outcome(data.category_levels(outcome))
+        expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
+        for k, v in mapping.items():
+            expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
+        return df.withColumn(outcome, expr), BINOMIAL
+    raise ValueError(f"outcome {outcome!r} must be continuous or binary")
+
+
+def _survey_constants(spec, data: ClariteFrame) -> dict:
+    """Check the design against the data, then collect its full-design
+    constants and weight means (both cached on the spec)."""
+    err = spec.validate(data)
+    if err is not None:
+        raise ValueError(err)
+    # warm the two cached full-design collects CONCURRENTLY:
+    # constants() (one groupBy-cluster agg) and weight_means() (one
+    # global agg) are independent jobs that otherwise run back-to-back;
+    # every later call hits the spec's cache.
+    from concurrent.futures import ThreadPoolExecutor as _TPE
+
+    with _TPE(max_workers=2) as _pool:
+        _cf = _pool.submit(spec.constants)
+        _wf = _pool.submit(spec.weight_means)
+        _cf.result()
+        _wf.result()
+    return spec.constants()
+
+
+@dataclass
+class _Fan:
+    """One outcome's fan-out: what every route reads."""
+
+    data: ClariteFrame
+    df: DataFrame  # outcome encoded; survey studies carry the design columns
+    outcome: str
+    family: str
+    rv_types: dict[str, str]
+    covariates: list[str]
+    covar_types: dict[str, str]
+    min_n: int
+    report_categorical_betas: bool
+    genotype_cols: set[str]
+    spec: object = None  # SurveyDesignSpec
+    w_consts: dict | None = None  # full-design constants + drop_unweighted
+    design_units: int = 0  # PSUs, or strata when the design has no cluster
+    vcov_method: str = "stata"
+
+    def default_row(self, rv: str) -> dict:
+        return _default_row(rv, self.outcome)
+
+    def prefetch_levels(self, extra: Sequence[str] = ()) -> None:
+        """Warm the discrete covariates' (and ``extra``'s) level cache in
+        one scan."""
+        self.data.prefetch_category_levels(
+            [c for c in self.covariates if self.covar_types[c] in (BINARY, CATEGORICAL)]
+            + list(extra)
+        )
+
+    def per_weight(self, group: list[str], mine: list[str], fit) -> tuple[list[dict], list[str]]:
+        """Run a survey route on ``mine`` (its share of ``group``) once per
+        weight group: ``fit(variables, weight_col, weight_mean,
+        weight_label)`` returns ``(rows, fallback variables)``. Returns
+        the rows and ``group``'s leftovers: the variables not in ``mine``,
+        then the fallbacks. A variable that a per-variable weight mapping
+        leaves out gets the all-NaN row (reference: "No weight found in
+        the survey design")."""
+        taken = set(mine)
+        rest = [v for v in group if v not in taken]
+        rows, by_weight = [], {}
+        for v in mine:
+            try:
+                wn = self.spec.weight_for(v)
+            except ValueError:  # a per-variable mapping without ``v``
+                rows.append(self.default_row(v))
+                continue
+            by_weight.setdefault(wn, []).append(v)
+        means = self.spec.weight_means()
+        for wn, wvars in by_weight.items():
+            r, fb = fit(wvars, None if wn is None else _weight_col(wn), means.get(wn, 1.0), wn)
+            rows.extend(r)
+            rest = rest + fb
+        return rows, rest
+
+
+def _gaussian_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
+    """Every unweighted Gaussian fit is closed-form OLS: ONE batched
+    masked-sum pass covers continuous variables (Wald t), binary
+    variables (Wald on the treatment dummy) and categorical variables
+    (LRT vs the restricted sub-block of the same Gram) — no shuffle of
+    data rows, no Python groups (functions/olsagg.py; ~20x the kernel at
+    the reference's canonical 22.6k x 970 shape). Variables whose
+    complete-case level set differs from the catalog's are left over."""
+    cont = [v for v in group if fan.rv_types[v] == CONTINUOUS]
+    enc = [v for v in group if fan.rv_types[v] in (BINARY, CATEGORICAL)]
+    fan.prefetch_levels(enc)
+    return olsagg.gaussian_assoc_rows(
+        fan.df, fan.outcome, cont, enc, fan.rv_types, fan.covariates, fan.covar_types,
+        fan.data.category_levels, fan.min_n, fan.report_categorical_betas, fan.default_row,
+    )
+
+
+def _binomial_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
+    """Unweighted binomial fits collapse to contingency cells when the
+    variable and all covariates have small value domains (GWAS
+    genotypes: 3 values) — ONE count aggregation, then frequency-weighted
+    IRLS (identical iterates to the row-level kernel) per variable on
+    the driver (functions/binomagg.py). Wide domains and continuous
+    covariates are left over."""
+    return binomagg.binomial_contingency_rows(
+        fan.df, fan.outcome, group, fan.rv_types, fan.covariates, fan.covar_types,
+        fan.min_n, fan.report_categorical_betas, fan.default_row,
+        known_small=fan.genotype_cols,
+    )
+
+
+def _survey_gaussian_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
+    """Survey-weighted Gaussian fits of CONTINUOUS variables are
+    closed-form: per-(variable, cluster) weighted sufficient statistics
+    feed the fit and the linearized sandwich, or the jackknife
+    replicates (functions/wolsagg.py) — one mapInPandas scan instead of
+    shipping data rows through per-variable Python groups. No-cluster
+    designs (strata-only / weights-only) need per-observation score outer
+    products for the sandwich: a SECOND scan computes per-stratum sums of
+    w^2 e^2 z z' against the pass-1 fit."""
+    cont = [v for v in group if fan.rv_types[v] == CONTINUOUS]
+    if cont:
+        fan.prefetch_levels()
+
+    def fit(wvars, weight_col, weight_mean, weight_label):
+        args = (
+            fan.df, fan.outcome, wvars, fan.covariates, fan.covar_types,
+            fan.data.category_levels, fan.min_n, fan.default_row, fan.w_consts,
+            weight_col, weight_mean, weight_label, STRAT_COL,
+        )
+        if fan.spec.has_cluster:
+            return wolsagg.weighted_gaussian_suffstats_rows(
+                *args, CLUST_COL, SUBSET_COL, vcov_method=fan.vcov_method
+            ), []
+        return wolsagg.weighted_gaussian_nocluster_rows(*args, SUBSET_COL), []
+
+    return fan.per_weight(group, cont, fit)
+
+
+def _survey_cells_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
+    """Survey-weighted binomial fits of discrete-domain variables
+    (binary/categorical, or genotype-encoded continuous) collapse to
+    weighted contingency cells keyed by (value, covariates, outcome,
+    CLUSTER): frequency-weighted IRLS reproduces the kernel's iterates
+    exactly and per-cluster score sums feed the same sandwich algebra
+    (functions/wbinomagg.py). Cell blowups are left over."""
+    mine = [
+        v
+        for v in group
+        if fan.rv_types[v] in (BINARY, CATEGORICAL)
+        or (fan.rv_types[v] == CONTINUOUS and v in fan.genotype_cols)
+    ]
+
+    def fit(wvars, weight_col, weight_mean, weight_label):
+        return wbinomagg.weighted_binomial_cells_rows(
+            fan.df, fan.outcome, wvars, fan.rv_types, fan.covariates, fan.covar_types,
+            fan.min_n, fan.report_categorical_betas, fan.default_row, fan.w_consts,
+            weight_col, weight_mean, weight_label, CLUST_COL, SUBSET_COL,
+            strat_col=STRAT_COL, vcov_method=fan.vcov_method,
+        )
+
+    return fan.per_weight(group, mine, fit)
+
+
+def _survey_irls_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
+    """Survey-weighted binomial fits of CONTINUOUS variables (with the
+    cell route's blowups): distributed IRLS — one shuffle-free scan per
+    iteration batched over all unconverged variables, then per-cluster
+    score sums for the linearized sandwich (functions/wbinomirls.py).
+    The jackknife batches replicate fits through the same scans, within
+    the ``JK_IRLS_MAX_UNITS`` budget; past it the grouped kernel's
+    one-scan in-pandas replicates are cheaper, so nothing is taken."""
+    cont = [v for v in group if fan.rv_types[v] == CONTINUOUS]
+    if fan.vcov_method == "jackknife" and len(cont) * fan.design_units > JK_IRLS_MAX_UNITS:
+        return [], group
+    fan.prefetch_levels()
+
+    def fit(wvars, weight_col, weight_mean, weight_label):
+        return wbinomirls.weighted_binomial_irls_rows(
+            fan.df, fan.outcome, wvars, fan.covariates, fan.covar_types,
+            fan.data.category_levels, fan.min_n, fan.default_row, fan.w_consts,
+            weight_col, weight_mean, weight_label, STRAT_COL, CLUST_COL, SUBSET_COL,
+            vcov_method=fan.vcov_method,
+        ), []
+
+    return fan.per_weight(group, cont, fit)
+
+
+def _batched_routes(fan: _Fan) -> list:
+    """The batched routes one outcome's variables pass through, in order
+    (the module docstring's table)."""
+    if fan.spec is None:
+        return [_gaussian_route if fan.family == GAUSSIAN else _binomial_route]
+    if fan.design_units > SURVEY_MAX_UNITS:
+        return []
+    if fan.family == GAUSSIAN:
+        return [_survey_gaussian_route]
+    if all(fan.covar_types[c] in (BINARY, CATEGORICAL) for c in fan.covariates):
+        return [_survey_cells_route, _survey_irls_route]
+    return []
+
+
 def association_study(
     data: ClariteFrame,
     outcomes: str | Sequence[str],
@@ -683,7 +922,7 @@ def association_study(
 
     With ``survey_design_spec`` (a SurveyDesignSpec) the fit is
     survey-adjusted (reference ``weighted_glm_regression.py``): the
-    narrow design frame equi-joins into the long table on ``ID``, the
+    narrow design frame equi-joins into the wide table on ``ID``, the
     full-design constants broadcast into the kernel, and inference uses
     the linearized sandwich vcov + survey dof (+ working-LRT for
     categorical variables).
@@ -704,6 +943,8 @@ def association_study(
         # whose kernel runs inside the grouped fan-out and must return
         # rows matching RESULT_SCHEMA.
         custom_kernel_factory = regression_kind
+        if survey_design_spec is not None:
+            raise ValueError("a custom regression_kind does not support survey designs")
     elif regression_kind not in (None, "glm", "weighted_glm"):
         raise ValueError(f"unsupported regression_kind {regression_kind!r}")
     if vcov_method not in ("stata", "jackknife"):
@@ -714,6 +955,10 @@ def association_study(
         raise ValueError("vcov_method='jackknife' requires a cluster survey design")
     if regression_kind == "weighted_glm" and survey_design_spec is None:
         raise ValueError("A 'survey_design_spec' must be provided")
+    if strategy not in ("grouped", "columnar"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy == "columnar" and survey_design_spec is not None:
+        raise ValueError("strategy='columnar' does not support survey designs (use grouped)")
     if isinstance(outcomes, str):
         outcomes = [outcomes]
     covariates = list(covariates or [])
@@ -721,8 +966,6 @@ def association_study(
     if regression_variables is None:
         regression_variables = [c for c in all_vars if c not in set(outcomes) | set(covariates)]
     rvs = list(regression_variables)
-
-    from clarite_python_spark.catalog import GENOTYPES
 
     genotype_cols = {
         c for c in [*rvs, *covariates] if data.catalog.get(c) == GENOTYPES
@@ -734,52 +977,49 @@ def association_study(
     for v in [*outcomes, *covariates, *rvs]:
         if v not in cat.types:
             raise ValueError(f"unknown variable {v!r}")
+    for outcome in outcomes:
+        if cat.get(outcome) == CATEGORICAL:
+            raise NotImplementedError(
+                "Categorical Outcomes are not yet supported for this type of regression."
+            )
     skipped = [v for v in rvs if cat.get(v) in (CONSTANT, UNKNOWN)]
     if skipped:
         warnings.warn(f"skipping {len(skipped)} constant/unknown regression variables")
         rvs = [v for v in rvs if v not in set(skipped)]
 
     covar_types = {c: cat.get(c) for c in covariates}
+    survey = {}
+    if survey_design_spec is not None:
+        consts = _survey_constants(survey_design_spec, data)
+        survey = dict(
+            spec=survey_design_spec,
+            w_consts=dict(consts, drop_unweighted=survey_design_spec.drop_unweighted),
+            design_units=len(
+                consts["clusters"] if survey_design_spec.has_cluster else consts["rows_per_strat"]
+            ),
+            vcov_method=vcov_method,
+        )
+        weight_info = {
+            "single_weight": survey_design_spec.single_weight,
+            "weight_name": survey_design_spec.weight_name,
+            "weight_names": survey_design_spec.weight_names,
+            "weight_means": survey_design_spec.weight_means(),
+            "drop_unweighted": survey_design_spec.drop_unweighted,
+        }
     results: list[DataFrame] = []
     for outcome in outcomes:
-        outcome_type = cat.get(outcome)
         my_rvs = [v for v in rvs if v != outcome]
         rv_types = {v: cat.get(v) for v in my_rvs}
-        df = _ensure_parallelism(data.df)
-        # survey-Gaussian suffstats passes deferred for thread-pool
-        # overlap with the grouped tail (set by that branch below)
-        deferred_gauss_jobs: list = []
-        deferred_gauss_rows: list[dict] = []
-        deferred_gauss_slot: int | None = None
-        if outcome_type == CONTINUOUS:
-            family = GAUSSIAN
-            df = df.withColumn(outcome, F.col(outcome).cast("double"))
-        elif outcome_type == BINARY:
-            family = BINOMIAL
-            mapping = _encode_binary_outcome(data.category_levels(outcome))
-            expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
-            for k, v in mapping.items():
-                expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
-            df = df.withColumn(outcome, expr)
-        elif outcome_type == CATEGORICAL:
-            raise NotImplementedError(
-                "Categorical Outcomes are not yet supported for this type of regression."
-            )
-        else:
-            raise ValueError(f"outcome {outcome!r} type could not be determined")
+        df, family = _encode_outcome(data, _ensure_parallelism(data.df), outcome)
 
         if standardize_data:
             z_cols = [v for v in my_rvs if rv_types[v] == CONTINUOUS]
             z_cols += [c for c in covariates if covar_types[c] == CONTINUOUS]
-            if outcome_type == CONTINUOUS:
+            if family == GAUSSIAN:
                 z_cols.append(outcome)
             df = _zscore_columns(df, z_cols)
 
         if strategy == "columnar":
-            if survey_design_spec is not None:
-                raise ValueError(
-                    "strategy='columnar' does not support survey designs (use grouped)"
-                )
             from clarite_python_spark.operators.analyze_columnar import (
                 columnar_association_study,
             )
@@ -797,436 +1037,43 @@ def association_study(
             )
             results.append(data.df.sparkSession.createDataFrame(pdf, RESULT_SCHEMA))
             continue
-        if strategy != "grouped":
-            raise ValueError(f"unknown strategy {strategy!r}")
 
         id_vars = [ID_COL, outcome, *covariates]
+        kernel_args = (
+            outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
+        )
         if survey_design_spec is not None:
-            err = survey_design_spec.validate(data)
-            if err is not None:
-                raise ValueError(err)
-            # warm the two cached full-design collects CONCURRENTLY
-            # (guide §2.6): constants() (one groupBy-cluster agg) and
-            # weight_means() (one global agg) are independent jobs that
-            # otherwise run back-to-back; every later call hits the
-            # spec's cache.
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as _pool:
-                _cf = _pool.submit(survey_design_spec.constants)
-                _wf = _pool.submit(survey_design_spec.weight_means)
-                _cf.result()
-                _wf.result()
             df = df.join(survey_design_spec.df, on=ID_COL, how="left")
-            id_vars = id_vars + survey_design_spec.design_columns()
-            weight_info = {
-                "single_weight": survey_design_spec.single_weight,
-                "weight_name": survey_design_spec.weight_name,
-                "weight_names": survey_design_spec.weight_names,
-                "weight_means": survey_design_spec.weight_means(),
-                "drop_unweighted": survey_design_spec.drop_unweighted,
-            }
+            id_vars += survey_design_spec.design_columns()
             kernel = _make_weighted_kernel(
-                outcome,
-                covariates,
-                covar_types,
-                rv_types,
-                family,
-                min_n,
-                report_categorical_betas,
-                survey_design_spec.constants(),
-                weight_info,
-                vcov_method=vcov_method,
+                *kernel_args, consts, weight_info, vcov_method=vcov_method
             )
         elif custom_kernel_factory is not None:
-            kernel = custom_kernel_factory(
-                outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
-            )
+            kernel = custom_kernel_factory(*kernel_args)
         else:
-            kernel = _make_assoc_kernel(
-                outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
-            )
-        # ONE block layout covering every variable type: values ride as
-        # strings (int->"1", double keeps its repr) and the kernels recover
-        # numerics with pd.to_numeric — one scan instead of one per type
-        # group, which matters when the table is the expensive input.
+            kernel = _make_assoc_kernel(*kernel_args)
+
+        # each batched route takes the variables it fits and hands the
+        # rest on; the grouped tail fits whatever is left
+        fan = _Fan(
+            data, df, outcome, family, rv_types, covariates, covar_types, min_n,
+            report_categorical_betas, genotype_cols, **survey,
+        )
         group = [v for v in my_rvs if rv_types[v] in (CONTINUOUS, BINARY, CATEGORICAL)]
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == GAUSSIAN
-            and (
-                vcov_method == "stata"
-                # jackknife replicates are closed-form on per-cluster
-                # Grams (wolsagg) — cluster designs only
-                or (vcov_method == "jackknife" and survey_design_spec.has_cluster)
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-        ):
-            # survey-weighted Gaussian fits for CONTINUOUS variables are
-            # closed-form: per-(variable, cluster) weighted sufficient
-            # statistics feed both the fit and the linearized sandwich
-            # (functions/wolsagg.py) — one mapInPandas scan instead of
-            # shipping data rows through per-variable Python groups. The
-            # accumulator is a sort + segment-sum, O(batch x p) per stat
-            # and independent of #clusters; the gate only bounds the
-            # DRIVER-side (#clusters x zdim^2) sandwich assembly (16k
-            # PSUs x a dozen params ~ MBs; a million-cluster design
-            # falls back to the grouped kernel).
-            # No-cluster designs (strata-only / weights-only) need
-            # per-observation score outer products for the sandwich — a
-            # SECOND scan computes per-stratum sums of w^2 e^2 z z'
-            # against the pass-1 fit (weighted_gaussian_nocluster_rows).
-            from clarite_python_spark.functions.wolsagg import (
-                weighted_gaussian_nocluster_rows,
-                weighted_gaussian_suffstats_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wsuff = [v for v in group if rv_types[v] == CONTINUOUS]
-            group = [v for v in group if rv_types[v] != CONTINUOUS]
-            by_weight: dict = {}
-            no_weight_rows: list[dict] = []
-            for v in wsuff:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        # reference: "No weight found ..." -> all-NaN row
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-
-            # DEFER the per-weight-group suffstats collects instead of
-            # running them inline: each is an independent Spark job, and
-            # the grouped-kernel tail below is another — submitting them
-            # together from a driver thread pool lets the categorical
-            # variables' fit job overlap the Gram passes instead of
-            # following them (guide §2.6; measured serial: 1.1 s Gram
-            # collect + 2.3 s grouped job back-to-back at sf0.1). The
-            # closures and the result-frame union order are identical to
-            # the serial form; only the scheduling changes.
-            def _gauss_job(wn, wvars):
-                w_args = (
-                    df,
-                    outcome,
-                    wvars,
-                    covariates,
-                    covar_types,
-                    data.category_levels,
-                    min_n,
-                    lambda rv: _default_row(rv, outcome),
-                    w_consts,
-                    _weight_col(wn) if wn is not None else None,
-                    weight_info["weight_means"][wn] if wn is not None else 1.0,
-                    wn,
-                )
-                if survey_design_spec.has_cluster:
-                    return weighted_gaussian_suffstats_rows(
-                        *w_args, STRAT_COL, CLUST_COL, SUBSET_COL,
-                        vcov_method=vcov_method,
-                    )
-                return weighted_gaussian_nocluster_rows(
-                    *w_args, STRAT_COL, SUBSET_COL
-                )
-
-            deferred_gauss_jobs = [
-                (lambda wn=wn, wvars=wvars: _gauss_job(wn, wvars))
-                for wn, wvars in by_weight.items()
-            ]
-            deferred_gauss_rows = list(no_weight_rows)
-            if deferred_gauss_jobs or deferred_gauss_rows:
-                deferred_gauss_slot = len(results)
-                results.append(None)  # filled after the pool resolves
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == BINOMIAL
-            and (
-                vcov_method == "stata"
-                or (vcov_method == "jackknife" and survey_design_spec.has_cluster)
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-            and all(covar_types[c] in (BINARY, CATEGORICAL) for c in covariates)
-        ):
-            # survey-weighted binomial fits collapse to weighted
-            # contingency cells keyed by (value, covariates, outcome,
-            # CLUSTER): frequency-weighted IRLS reproduces the kernel's
-            # iterates exactly and per-cluster score sums feed the same
-            # sandwich algebra (functions/wbinomagg.py) — one codegen
-            # count/sum aggregation instead of shipping data rows through
-            # per-variable Python groups. Discrete-domain variables only
-            # (binary/categorical, or genotype-encoded continuous);
-            # everything else stays on the grouped kernel below.
-            from clarite_python_spark.functions.wbinomagg import (
-                weighted_binomial_cells_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wsuff = [
-                v
-                for v in group
-                if rv_types[v] in (BINARY, CATEGORICAL)
-                or (rv_types[v] == CONTINUOUS and v in genotype_cols)
-            ]
-            group = [v for v in group if v not in set(wsuff)]
-            by_weight = {}
-            no_weight_rows = []
-            for v in wsuff:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-            w_rows = list(no_weight_rows)
-            for wn, wvars in by_weight.items():
-                r_rows, fb = weighted_binomial_cells_rows(
-                    df,
-                    outcome,
-                    wvars,
-                    rv_types,
-                    covariates,
-                    covar_types,
-                    min_n,
-                    report_categorical_betas,
-                    lambda rv: _default_row(rv, outcome),
-                    w_consts,
-                    _weight_col(wn) if wn is not None else None,
-                    weight_info["weight_means"][wn] if wn is not None else 1.0,
-                    wn,
-                    CLUST_COL,
-                    SUBSET_COL,
-                    strat_col=STRAT_COL,
-                    vcov_method=vcov_method,
-                )
-                w_rows.extend(r_rows)
-                group.extend(fb)  # cell blowup -> grouped kernel
-            if w_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(w_rows, RESULT_SCHEMA)
-                )
-        n_wirls_cand = sum(1 for v in group if rv_types[v] == CONTINUOUS)
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == BINOMIAL
-            and (
-                vcov_method == "stata"
-                # jackknife = replicate IRLS fits batched through the
-                # same scans (cluster designs only), gated on the
-                # (#variables x #clusters) unit budget — see
-                # JK_IRLS_MAX_UNITS; past it the grouped kernel's
-                # one-scan in-pandas replicates win
-                or (
-                    vcov_method == "jackknife"
-                    and survey_design_spec.has_cluster
-                    and n_wirls_cand
-                    * len(survey_design_spec.constants()["clusters"])
-                    <= JK_IRLS_MAX_UNITS
-                )
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-            and all(covar_types[c] in (BINARY, CATEGORICAL) for c in covariates)
-        ):
-            # CONTINUOUS variables in a weighted logistic study (incl.
-            # wide-domain cell fallbacks routed just above): distributed
-            # IRLS — one shuffle-free scan per iteration batched over all
-            # unconverged variables, then per-cluster score sums for the
-            # linearized sandwich (functions/wbinomirls.py). This closes
-            # the last weighted scale cliff: these fits previously shipped
-            # rows x variables through the grouped kernel.
-            from clarite_python_spark.functions.wbinomirls import (
-                weighted_binomial_irls_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wirls = [v for v in group if rv_types[v] == CONTINUOUS]
-            group = [v for v in group if v not in set(wirls)]
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-            )
-            by_weight = {}
-            no_weight_rows = []
-            for v in wirls:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-            w_rows = list(no_weight_rows)
-            for wn, wvars in by_weight.items():
-                w_rows.extend(
-                    weighted_binomial_irls_rows(
-                        df,
-                        outcome,
-                        wvars,
-                        covariates,
-                        covar_types,
-                        data.category_levels,
-                        min_n,
-                        lambda rv: _default_row(rv, outcome),
-                        w_consts,
-                        _weight_col(wn) if wn is not None else None,
-                        weight_info["weight_means"][wn] if wn is not None else 1.0,
-                        wn,
-                        STRAT_COL,
-                        CLUST_COL,
-                        SUBSET_COL,
-                        vcov_method=vcov_method,
-                    )
-                )
-            if w_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(w_rows, RESULT_SCHEMA)
-                )
-        if (
-            use_sufficient_stats
-            and survey_design_spec is None
-            and custom_kernel_factory is None
-            and family == GAUSSIAN
-        ):
-            # Every Gaussian fit is closed-form OLS: ONE batched
-            # masked-sum pass covers continuous variables (Wald t),
-            # binary variables (Wald on the treatment dummy) and
-            # categorical variables (LRT vs the restricted sub-block of
-            # the same Gram) — no shuffle of data rows, no
-            # Python groups (functions/olsagg.py; ~20x the kernel at the
-            # reference's canonical 22.6k x 970 shape). Variables whose
-            # complete-case level set differs from the catalog's fall
-            # back to the grouped kernel below.
-            from clarite_python_spark.functions.olsagg import gaussian_assoc_rows
-
-            cont = [v for v in group if rv_types[v] == CONTINUOUS]
-            enc = [v for v in group if rv_types[v] in (BINARY, CATEGORICAL)]
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-                + enc
-            )
-            assoc_rows, group = gaussian_assoc_rows(
-                df,
-                outcome,
-                cont,
-                enc,
-                rv_types,
-                covariates,
-                covar_types,
-                data.category_levels,
-                min_n,
-                report_categorical_betas,
-                lambda rv: _default_row(rv, outcome),
-            )
-            if assoc_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(assoc_rows, RESULT_SCHEMA)
-                )
-        if (
-            use_sufficient_stats
-            and survey_design_spec is None
-            and custom_kernel_factory is None
-            and family == BINOMIAL
-        ):
-            # Binomial fits collapse to contingency cells when the
-            # variable and all covariates have small value domains (GWAS
-            # genotypes: 3 values) — ONE count aggregation replaces the
-            # grouped tail's shuffle of data rows, then frequency-weighted IRLS
-            # (identical iterates to the row-level kernel) runs
-            # driver-side per variable (functions/binomagg.py). Variables
-            # with wide domains or continuous covariates fall back to the
-            # grouped kernel below.
-            from clarite_python_spark.functions.binomagg import (
-                binomial_contingency_rows,
-            )
-
-            b_rows, group = binomial_contingency_rows(
-                df,
-                outcome,
-                group,
-                rv_types,
-                covariates,
-                covar_types,
-                min_n,
-                report_categorical_betas,
-                lambda rv: _default_row(rv, outcome),
-                known_small=genotype_cols,
-            )
-            if b_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(b_rows, RESULT_SCHEMA)
-                )
-        grouped_res = None
+        driver_rows: list[dict] = []
+        if use_sufficient_stats and custom_kernel_factory is None:
+            for route in _batched_routes(fan):
+                rows, group = route(fan, group)
+                driver_rows.extend(rows)
+        if driver_rows:
+            results.append(data.df.sparkSession.createDataFrame(driver_rows, RESULT_SCHEMA))
         if group:
-            # ONE selectExpr parse: each row ships once per variable
-            # block, that block's values in one array<string>
-            blocks = _variable_blocks(
-                group, df.sparkSession.sparkContext.defaultParallelism
-            )
+            # ONE block layout covering every variable type and ONE
+            # selectExpr parse: each row ships once per variable block,
+            # that block's values in one array<string> (int->"1", double
+            # keeps its repr; the kernels recover numerics with
+            # pd.to_numeric)
+            blocks = _variable_blocks(group, df.sparkSession.sparkContext.defaultParallelism)
             arrays = ", ".join(
                 "array(" + ", ".join(f"CAST({qname(v)} AS STRING)" for v in b) + ")"
                 for b in blocks
@@ -1235,46 +1082,11 @@ def association_study(
                 *[qname(c) for c in id_vars],
                 f"posexplode(array({arrays})) AS (__block, __values)",
             )
-            grouped_res = wide.groupBy("__block").applyInPandas(
-                _block_kernel(kernel, id_vars, blocks), RESULT_SCHEMA
+            results.append(
+                wide.groupBy("__block").applyInPandas(
+                    _block_kernel(kernel, id_vars, blocks), RESULT_SCHEMA
+                )
             )
-        if deferred_gauss_slot is not None:
-            # resolve the deferred suffstats passes, overlapping them
-            # with the grouped tail's job (guide §2.6): family jobs are
-            # submitted first so FIFO scheduling gives them priority and
-            # the grouped job back-fills; the grouped rows come back as
-            # a local frame with identical values. Prefetch the shared
-            # level cache so concurrent closures don't race it.
-            from concurrent.futures import ThreadPoolExecutor
-
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-            )
-            spark_sess = data.df.sparkSession
-            n_workers = len(deferred_gauss_jobs) + (1 if grouped_res is not None else 0)
-            with ThreadPoolExecutor(max_workers=max(1, min(4, n_workers))) as pool:
-                futs = [pool.submit(job) for job in deferred_gauss_jobs]
-                gfut = (
-                    pool.submit(grouped_res.collect)
-                    if grouped_res is not None
-                    else None
-                )
-                w_rows = list(deferred_gauss_rows)
-                for f in futs:
-                    w_rows.extend(f.result())
-                grouped_rows = gfut.result() if gfut is not None else None
-            if w_rows:
-                results[deferred_gauss_slot] = spark_sess.createDataFrame(
-                    w_rows, RESULT_SCHEMA
-                )
-            else:
-                results.pop(deferred_gauss_slot)
-            if grouped_rows is not None:
-                results.append(
-                    spark_sess.createDataFrame(grouped_rows, RESULT_SCHEMA)
-                )
-        elif grouped_res is not None:
-            results.append(grouped_res)
 
     out = results[0]
     for r in results[1:]:
@@ -1490,20 +1302,7 @@ def interaction_study(
 
     results = []
     for outcome in outcomes:
-        outcome_type = cat.get(outcome)
-        df = _ensure_parallelism(data.df)
-        if outcome_type == CONTINUOUS:
-            family = GAUSSIAN
-            df = df.withColumn(outcome, F.col(outcome).cast("double"))
-        elif outcome_type == BINARY:
-            family = BINOMIAL
-            mapping = _encode_binary_outcome(data.category_levels(outcome))
-            expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
-            for k, v in mapping.items():
-                expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
-            df = df.withColumn(outcome, expr)
-        else:
-            raise ValueError(f"outcome {outcome!r} must be continuous or binary")
+        df, family = _encode_outcome(data, _ensure_parallelism(data.df), outcome)
 
         my_pairs = list(pairs)
         if use_sufficient_stats and family == GAUSSIAN:

@@ -368,6 +368,22 @@ def test_custom_regression_kernel(ewas_cf):
     assert (res.pvalue == 0.5).all()
 
 
+def test_custom_regression_kind_rejects_survey_design(ewas_cf):
+    """A custom kernel factory has no survey-weighted form: combining it
+    with a design is an error, not a silently unused factory."""
+    from clarite_python_spark.survey import SurveyDesignSpec
+
+    spec = SurveyDesignSpec(ewas_cf.df.selectExpr("ID", "1.0 AS w"), weights="w")
+    with pytest.raises(ValueError, match="regression_kind"):
+        analyze.association_study(
+            ewas_cf,
+            outcomes="outcome",
+            covariates=["age"],
+            regression_kind=lambda *args: None,
+            survey_design_spec=spec,
+        )
+
+
 def test_get_significant_and_ewas_io(spark, tmp_path, ewas_cf):
     from clarite_python_spark.sources.io import load_ewas, save_ewas
 

@@ -326,6 +326,30 @@ def test_quoted_names_match_plain_names_survey(spark):
     pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=1e-9)
 
 
+def test_survey_grouped_tail_stays_distributed(ewas_cf):
+    """A survey-Gaussian study hands its binary and categorical variables
+    to the grouped tail as a lazy grouped map: the returned plan still
+    holds the ``applyInPandas`` node, not rows collected to the driver."""
+    from clarite_python_spark.survey import SurveyDesignSpec
+
+    design_df = ewas_cf.df.selectExpr(
+        "ID", "ID % 6 AS strat", "floor(ID / 6) % 2 AS psu", "1.0 + ID % 5 / 10 AS w"
+    )
+    spec = SurveyDesignSpec(design_df, strata="strat", cluster="psu", nest=True, weights="w")
+    res = analyze.association_study(
+        ewas_cf,
+        outcomes="outcome",
+        regression_variables=["signal", "noise1", "sex", "cat_var"],
+        covariates=["age"],
+        survey_design_spec=spec,
+        min_n=50,
+    )
+    assert "FlatMapGroupsInPandas" in res._jdf.queryExecution().analyzed().toString()
+    rows = res.collect()
+    assert {r["Variable"] for r in rows} == {"signal", "noise1", "sex", "cat_var"}
+    assert all(r["Converged"] for r in rows)
+
+
 # ---- grouped fan-out layout ---------------------------------------------------
 
 
