@@ -30,8 +30,8 @@ cluster (reference survey_design.py:195-198) — use TWO scans
 Grams; pass 2 computes per-stratum sums of ``w^2 e^2 z z'`` against the
 fitted coefficients, which is exactly ``sum_i s_i s_i'`` — so stratum
 centering reduces to subtracting ``n_full * m m'`` in closed form.
-Binary/categorical variables and Binomial outcomes route to
-functions/wbinomagg.py (weighted contingency cells) instead.
+Binary/categorical variables and Binomial outcomes go to the grouped
+weighted kernel instead.
 
 Verified against the same R `survey` goldens as the kernel
 (fpc / apiclus1 designs) and against the kernel itself at rtol 1e-9.

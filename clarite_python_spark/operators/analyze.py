@@ -16,19 +16,15 @@ route                       family    design              takes                l
 ``olsagg``                  Gaussian  none                every variable       grouped tail
 ``binomagg``                binomial  none                small value domains  grouped tail
 ``wolsagg``                 Gaussian  survey [1]          continuous           grouped tail
-``wbinomagg`` cells         binomial  survey [1], [2]     binary, categorical, ``wbinomirls``
-                                                          genotype
-``wbinomirls``              binomial  survey [1], [2],    continuous           grouped tail
-                                      [3]
 grouped tail                any       any                 what is left         --
 ==========================  ========  ==================  ===================  ================
 
-[1] at most ``SURVEY_MAX_UNITS`` PSUs (strata, without clusters);
-[2] binary/categorical covariates only; [3] a jackknife within the
-``JK_IRLS_MAX_UNITS`` budget. ``use_sufficient_stats=False`` or a
-custom ``regression_kind`` sends every variable to the grouped tail.
-Survey routes run once per weight group; a variable a per-variable
-weight mapping leaves out gets an all-NaN row.
+[1] at most ``SURVEY_MAX_UNITS`` PSUs (strata, without clusters).
+A survey-weighted binomial study has no batched route: the grouped tail
+fits every variable. ``use_sufficient_stats=False`` or a custom
+``regression_kind`` sends every variable to the grouped tail. The survey
+route runs once per weight group; a variable a per-variable weight
+mapping leaves out gets an all-NaN row.
 
 The grouped tail is laid out in variable blocks:
 
@@ -89,7 +85,7 @@ from clarite_python_spark.catalog import (
     qname,
     sort_result,
 )
-from clarite_python_spark.functions import binomagg, olsagg, wbinomagg, wbinomirls, wolsagg
+from clarite_python_spark.functions import binomagg, olsagg, wolsagg
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 from clarite_python_spark.functions.glm import (
     BINOMIAL,
@@ -115,17 +111,8 @@ __all__ = [
 ]
 
 
-# Budget of (variable x left-out-cluster) replicate units the
-# jackknife-IRLS engine may batch through distributed scans. Units are
-# chunked at 256/scan and each chunk runs its own multi-iteration IRLS
-# loop, so full-table scans grow as ceil(units/256) x iterations — past
-# this budget (~16 chunks x ~8 iters ~ 130 scans) the grouped kernel's
-# in-pandas delete-1 replicates (ONE scan, per-variable numpy refits)
-# are the cheaper engine and the routing falls back to it.
-JK_IRLS_MAX_UNITS = 4096
-
-# Largest survey design the batched survey routes take, in PSUs (strata
-# when the design has no cluster): they assemble the sandwich on the
+# Largest survey design the batched survey route takes, in PSUs (strata
+# when the design has no cluster): it assembles the sandwich on the
 # driver from one #units x params^2 score block (16k PSUs x a dozen
 # params ~ MBs); a larger design leaves every variable to the grouped
 # kernel.
@@ -744,31 +731,6 @@ class _Fan:
             + list(extra)
         )
 
-    def per_weight(self, group: list[str], mine: list[str], fit) -> tuple[list[dict], list[str]]:
-        """Run a survey route on ``mine`` (its share of ``group``) once per
-        weight group: ``fit(variables, weight_col, weight_mean,
-        weight_label)`` returns ``(rows, fallback variables)``. Returns
-        the rows and ``group``'s leftovers: the variables not in ``mine``,
-        then the fallbacks. A variable that a per-variable weight mapping
-        leaves out gets the all-NaN row (reference: "No weight found in
-        the survey design")."""
-        taken = set(mine)
-        rest = [v for v in group if v not in taken]
-        rows, by_weight = [], {}
-        for v in mine:
-            try:
-                wn = self.spec.weight_for(v)
-            except ValueError:  # a per-variable mapping without ``v``
-                rows.append(self.default_row(v))
-                continue
-            by_weight.setdefault(wn, []).append(v)
-        means = self.spec.weight_means()
-        for wn, wvars in by_weight.items():
-            r, fb = fit(wvars, None if wn is None else _weight_col(wn), means.get(wn, 1.0), wn)
-            rows.extend(r)
-            rest = rest + fb
-        return rows, rest
-
 
 def _gaussian_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
     """Every unweighted Gaussian fit is closed-form OLS: ONE batched
@@ -809,73 +771,38 @@ def _survey_gaussian_route(fan: _Fan, group: list[str]) -> tuple[list[dict], lis
     shipping data rows through per-variable Python groups. No-cluster
     designs (strata-only / weights-only) need per-observation score outer
     products for the sandwich: a SECOND scan computes per-stratum sums of
-    w^2 e^2 z z' against the pass-1 fit."""
+    w^2 e^2 z z' against the pass-1 fit. The route runs once per weight
+    group; a variable that a per-variable weight mapping leaves out gets
+    the all-NaN row (reference: "No weight found in the survey
+    design")."""
     cont = [v for v in group if fan.rv_types[v] == CONTINUOUS]
     if cont:
         fan.prefetch_levels()
-
-    def fit(wvars, weight_col, weight_mean, weight_label):
+    rows, by_weight = [], {}
+    for v in cont:
+        try:
+            wn = fan.spec.weight_for(v)
+        except ValueError:  # a per-variable mapping without ``v``
+            rows.append(fan.default_row(v))
+            continue
+        by_weight.setdefault(wn, []).append(v)
+    means = fan.spec.weight_means()
+    for wn, wvars in by_weight.items():
         args = (
             fan.df, fan.outcome, wvars, fan.covariates, fan.covar_types,
             fan.data.category_levels, fan.min_n, fan.default_row, fan.w_consts,
-            weight_col, weight_mean, weight_label, STRAT_COL,
+            None if wn is None else _weight_col(wn), means.get(wn, 1.0), wn, STRAT_COL,
         )
         if fan.spec.has_cluster:
-            return wolsagg.weighted_gaussian_suffstats_rows(
-                *args, CLUST_COL, SUBSET_COL, vcov_method=fan.vcov_method
-            ), []
-        return wolsagg.weighted_gaussian_nocluster_rows(*args, SUBSET_COL), []
-
-    return fan.per_weight(group, cont, fit)
-
-
-def _survey_cells_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
-    """Survey-weighted binomial fits of discrete-domain variables
-    (binary/categorical, or genotype-encoded continuous) collapse to
-    weighted contingency cells keyed by (value, covariates, outcome,
-    CLUSTER): frequency-weighted IRLS reproduces the kernel's iterates
-    exactly and per-cluster score sums feed the same sandwich algebra
-    (functions/wbinomagg.py). Cell blowups are left over."""
-    mine = [
-        v
-        for v in group
-        if fan.rv_types[v] in (BINARY, CATEGORICAL)
-        or (fan.rv_types[v] == CONTINUOUS and v in fan.genotype_cols)
-    ]
-
-    def fit(wvars, weight_col, weight_mean, weight_label):
-        return wbinomagg.weighted_binomial_cells_rows(
-            fan.df, fan.outcome, wvars, fan.rv_types, fan.covariates, fan.covar_types,
-            fan.min_n, fan.report_categorical_betas, fan.default_row, fan.w_consts,
-            weight_col, weight_mean, weight_label, CLUST_COL, SUBSET_COL,
-            strat_col=STRAT_COL, vcov_method=fan.vcov_method,
-        )
-
-    return fan.per_weight(group, mine, fit)
-
-
-def _survey_irls_route(fan: _Fan, group: list[str]) -> tuple[list[dict], list[str]]:
-    """Survey-weighted binomial fits of CONTINUOUS variables (with the
-    cell route's blowups): distributed IRLS — one shuffle-free scan per
-    iteration batched over all unconverged variables, then per-cluster
-    score sums for the linearized sandwich (functions/wbinomirls.py).
-    The jackknife batches replicate fits through the same scans, within
-    the ``JK_IRLS_MAX_UNITS`` budget; past it the grouped kernel's
-    one-scan in-pandas replicates are cheaper, so nothing is taken."""
-    cont = [v for v in group if fan.rv_types[v] == CONTINUOUS]
-    if fan.vcov_method == "jackknife" and len(cont) * fan.design_units > JK_IRLS_MAX_UNITS:
-        return [], group
-    fan.prefetch_levels()
-
-    def fit(wvars, weight_col, weight_mean, weight_label):
-        return wbinomirls.weighted_binomial_irls_rows(
-            fan.df, fan.outcome, wvars, fan.covariates, fan.covar_types,
-            fan.data.category_levels, fan.min_n, fan.default_row, fan.w_consts,
-            weight_col, weight_mean, weight_label, STRAT_COL, CLUST_COL, SUBSET_COL,
-            vcov_method=fan.vcov_method,
-        ), []
-
-    return fan.per_weight(group, cont, fit)
+            rows.extend(
+                wolsagg.weighted_gaussian_suffstats_rows(
+                    *args, CLUST_COL, SUBSET_COL, vcov_method=fan.vcov_method
+                )
+            )
+        else:
+            rows.extend(wolsagg.weighted_gaussian_nocluster_rows(*args, SUBSET_COL))
+    taken = set(cont)
+    return rows, [v for v in group if v not in taken]
 
 
 def _batched_routes(fan: _Fan) -> list:
@@ -883,12 +810,8 @@ def _batched_routes(fan: _Fan) -> list:
     (the module docstring's table)."""
     if fan.spec is None:
         return [_gaussian_route if fan.family == GAUSSIAN else _binomial_route]
-    if fan.design_units > SURVEY_MAX_UNITS:
-        return []
-    if fan.family == GAUSSIAN:
+    if fan.family == GAUSSIAN and fan.design_units <= SURVEY_MAX_UNITS:
         return [_survey_gaussian_route]
-    if all(fan.covar_types[c] in (BINARY, CATEGORICAL) for c in fan.covariates):
-        return [_survey_cells_route, _survey_irls_route]
     return []
 
 
@@ -926,6 +849,12 @@ def association_study(
     full-design constants broadcast into the kernel, and inference uses
     the linearized sandwich vcov + survey dof (+ working-LRT for
     categorical variables).
+
+    ``use_sufficient_stats`` (default True) lets the batched routes of
+    the module docstring's table take the variables they fit from
+    aggregations; False sends every variable to the grouped tail. A
+    survey-weighted binomial study has no batched route, so the grouped
+    tail fits it either way.
 
     ``strategy``: ``"grouped"`` (default) = batched aggregations plus
     ``groupBy(variable block).applyInPandas`` — right for wide/short EWAS

@@ -73,50 +73,6 @@ def main() -> None:
     # shared-machine single-shot variance is +-50%; report the min of two
     warm = min(run()[0], run()[0])
 
-    # --- survey-weighted variant: same shape through the weighted
-    # contingency-cell path (functions/wbinomagg.py) — 30 strata x 2 PSUs,
-    # mildly informative weights, stata sandwich. The per-(SNP, cluster,
-    # cell) aggregation shuffles #SNPs x ~360 tiny rows; the grouped
-    # weighted kernel would melt rows x SNPs instead.
-    from pyspark.sql import functions as F
-
-    from clarite_python_spark.survey import SurveyDesignSpec
-
-    design_df = (
-        spark.read.parquet(src)
-        .select(
-            "ID",
-            *[c for c in []],
-        )
-        .withColumn("strat", F.col("ID") % 30)
-        .withColumn("psu", F.col("ID") % 60)
-        .withColumn("w", 1.0 + (F.col("ID") % 7) / 7.0)
-    )
-    design = SurveyDesignSpec(
-        design_df, weights="w", cluster="psu", strata="strat", nest=False
-    )
-
-    def run_weighted(use_suffstats: bool, rvs=None) -> tuple[float, int]:
-        t0 = time.perf_counter()
-        res = analyze.association_study(
-            cf,
-            outcomes="Outcome",
-            regression_variables=rvs,
-            min_n=50,
-            encoding="additive",
-            survey_design_spec=design,
-            use_sufficient_stats=use_suffstats,
-        )
-        n_out = res.count()
-        return time.perf_counter() - t0, n_out
-
-    w_cold, w_rows = run_weighted(True)
-    w_warm = min(run_weighted(True)[0], run_weighted(True)[0])
-    # grouped weighted kernel throughput sampled at 100 SNPs (full width
-    # would take minutes — that contrast is the point)
-    kernel_sample_n = min(100, p)
-    k_sec, _ = run_weighted(False, rvs=names[:kernel_sample_n])
-
     print(
         json.dumps(
             {
@@ -128,15 +84,6 @@ def main() -> None:
                 "n_snps": p,
                 "fits_per_sec": round(p / warm, 1),
                 "result_rows": n_rows,
-                "weighted_warm_sec": round(w_warm, 3),
-                "weighted_cold_sec": round(w_cold, 3),
-                "weighted_fits_per_sec": round(p / w_warm, 1),
-                "weighted_result_rows": w_rows,
-                "weighted_kernel_sample": {
-                    "n_snps": kernel_sample_n,
-                    "sec": round(k_sec, 3),
-                    "fits_per_sec": round(kernel_sample_n / k_sec, 1),
-                },
             }
         )
     )

@@ -88,41 +88,6 @@ def test_sessionized_plan_single_keyed_shuffle(spark):
     assert "partial_count" in plan  # map-side combine before the shuffle
 
 
-def test_weighted_binomial_cells_agg_stays_jvm_side(spark):
-    """The wbinomagg cell aggregation must be a pure unpivot -> hash
-    aggregate (Expand + partial agg, no Python/Arrow eval nodes): the
-    only Python in the weighted suffstats path is driver-side IRLS."""
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.parquet(f"{SF_DIR}/orders.parquet")
-        .select(
-            F.col("o_orderkey").alias("ID"),
-            (F.col("o_totalprice") > 150000).cast("double").alias("y"),
-            F.col("o_orderstatus").alias("cov"),
-            (F.col("o_orderkey") % 10).alias("__g"),
-            F.lit(False).alias("__wmiss"),
-            F.lit(1.0).alias("__w"),
-            F.col("o_orderpriority").alias("v1"),
-            F.col("o_orderdate").cast("string").alias("v2"),
-        )
-    )
-    long = df.select(
-        "y", "cov", "__g", "__wmiss", "__w",
-        *[F.col(v).cast("string").alias(v) for v in ("v1", "v2")],
-    ).unpivot(["y", "cov", "__g", "__wmiss", "__w"], ["v1", "v2"], "variable", "value")
-    cells = long.groupBy("variable", "value", "y", "cov", "__g", "__wmiss").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__w").alias("__sw"),
-        F.sum(F.col("__w") * F.col("__w")).alias("__sw2"),
-    )
-    plan = _formatted_plan(cells)
-    assert "Expand" in plan  # the unpivot
-    assert "partial_count" in plan or "partial_sum" in plan  # map-side combine
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
-        assert bad not in plan
-
-
 def test_chained_operators_fuse_into_one_scan(orders_cf):
     """QC chain (colfilter -> rowfilter) stays ONE scan with both the
     filter and the pruning applied — lazy frames fuse, unlike the

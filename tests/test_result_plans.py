@@ -255,8 +255,9 @@ def test_blockcorr_rejects_duplicate_names(spark):
 
 def _survey_parts(spark, names: dict[str, str]):
     """A study frame and its design: two continuous variables (the closed-form
-    weighted Gaussian and distributed weighted IRLS paths) and a categorical
-    one (the grouped weighted kernel), named through ``names``."""
+    weighted Gaussian path for ``y``, the grouped weighted kernel for
+    ``yb``) and a categorical one (the grouped weighted kernel), named
+    through ``names``."""
     rng = np.random.RandomState(17)
     n = 400
     strat = np.repeat(np.arange(8), n // 8)

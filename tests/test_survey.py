@@ -809,36 +809,3 @@ def test_gaussian_jackknife_suffstats_matches_kernel(spark, nhanes_real_cf):
         b = slow[col].astype(float).to_numpy()
         both = ~(np.isnan(a) & np.isnan(b))
         assert np.allclose(a[both], b[both], rtol=1e-9, atol=1e-12), (col, a, b)
-
-
-@pytest.mark.parametrize("single_cluster", ["certainty", "adjust", "average"])
-def test_binomial_jackknife_cells_match_kernel_on_lonely_psu(spark, single_cluster):
-    """Cell-path jackknife (exact freq-weighted replicate refits) vs the
-    grouped kernel on the NHANES lonely-PSU design — the mh=0 lonely
-    replicate handling must agree under every single_cluster policy."""
-    cf = from_csv(spark, f"{DATA}/nhanes_lonely_data.csv", index_col=None)
-    cf = modify.make_binary(cf, only=["HI_CHOL", "RIAGENDR"])
-    cf = modify.make_categorical(cf, only=["race", "agecat"])
-
-    def run(use_suff):
-        design = SurveyDesignSpec(
-            cf.df, weights="WTMEC2YR", cluster="SDMVPSU", strata="SDMVSTRA",
-            fpc=None, nest=True, single_cluster=single_cluster,
-        )
-        data = modify.colfilter(cf, only=["HI_CHOL", "RIAGENDR", "race", "agecat"])
-        return (
-            analyze.association_study(
-                data=data, outcomes="HI_CHOL", covariates=[],
-                survey_design_spec=design, min_n=1,
-                vcov_method="jackknife", use_sufficient_stats=use_suff,
-            )
-            .toPandas().set_index("Variable").sort_index()
-        )
-
-    fast, slow = run(True), run(False)
-    assert list(fast.index) == list(slow.index)
-    for col in ("Beta", "SE", "pvalue", "LRT_pvalue"):
-        a = fast[col].astype(float).to_numpy()
-        b = slow[col].astype(float).to_numpy()
-        both = ~(np.isnan(a) & np.isnan(b))
-        assert np.allclose(a[both], b[both], rtol=1e-9), (col, a, b)

@@ -5,10 +5,13 @@ categorical variables and a per-variable weight mapping that leaves one
 variable unmapped; ``w2`` is null on a few rows and the design drops
 unweighted observations. Under four designs (cluster + strata with the
 linearized and the jackknife variance, strata only, weights only) and two
-outcomes (continuous ``y``; binary ``yb`` with discrete covariates only),
-the batched routes (``use_sufficient_stats=True``) must give the grouped
-weighted kernel's rows (``use_sufficient_stats=False``), and each route
-must be entered with exactly the variables it is meant to take.
+outcomes (continuous ``y``; binary ``yb``), each route must be entered
+with exactly the variables it is meant to take, and for ``y`` the batched
+routes (``use_sufficient_stats=True``) must give the grouped weighted
+kernel's rows (``use_sufficient_stats=False``). No batched route takes a
+survey-weighted binomial variable, so the ``yb`` fits are checked against
+an independent numpy reference instead: weighted IRLS for the
+coefficients and the Stata linearized sandwich for the standard errors.
 """
 
 from __future__ import annotations
@@ -22,13 +25,7 @@ import pytest
 from pyspark.sql import types as T
 
 from clarite_python_spark.catalog import ClariteFrame, VariableCatalog
-from clarite_python_spark.functions import (
-    binomagg,
-    olsagg,
-    wbinomagg,
-    wbinomirls,
-    wolsagg,
-)
+from clarite_python_spark.functions import binomagg, olsagg, wolsagg
 from clarite_python_spark.operators import analyze
 from clarite_python_spark.survey import SurveyDesignSpec
 
@@ -91,14 +88,12 @@ DESIGN_SCHEMA = T.StructType(
 ROUTES = {
     "weighted_gaussian_suffstats_rows": wolsagg,
     "weighted_gaussian_nocluster_rows": wolsagg,
-    "weighted_binomial_cells_rows": wbinomagg,
-    "weighted_binomial_irls_rows": wbinomirls,
     "gaussian_assoc_rows": olsagg,
     "binomial_contingency_rows": binomagg,
 }
-# closed-form Grams and cell IRLS agree with the kernel to rounding, the
-# distributed IRLS to its convergence tolerance
-RTOL_CELLS_AND_GRAMS = 1e-9
+# closed-form Grams agree with the kernel to rounding; the kernel's IRLS
+# agrees with the numpy reference to its convergence tolerance
+RTOL_GRAMS = 1e-9
 RTOL_IRLS = 1e-6
 
 
@@ -220,12 +215,7 @@ def _expected_routes(design: str, outcome: str) -> list[tuple]:
             (gram, "w2", ["c2"]),
             ("grouped", None, ["b1", "k1"]),
         ]
-    return [
-        ("weighted_binomial_cells_rows", "w1", ["b1"]),
-        ("weighted_binomial_cells_rows", "w2", ["k1"]),
-        ("weighted_binomial_irls_rows", "w1", ["c1"]),
-        ("weighted_binomial_irls_rows", "w2", ["c2"]),
-    ]
+    return [("grouped", None, sorted(RVS))]
 
 
 def _canonical(df: pd.DataFrame) -> pd.DataFrame:
@@ -239,14 +229,7 @@ def test_batched_routes_match_grouped_kernel(tables, route_calls, design, outcom
     cf, design_df = tables
     fast = _canonical(_study(cf, design_df, design, outcome, True))
     assert sorted(route_calls) == sorted(_expected_routes(design, outcome))
-    route_calls.clear()
-    slow = _canonical(_study(cf, design_df, design, outcome, False))
-    assert route_calls == [("grouped", None, sorted(RVS))]
-
-    assert fast["Variable"].tolist() == slow["Variable"].tolist() == sorted(RVS)
-    for col in ("Outcome", "Category", "Variable_type", "Weight", "Converged"):
-        assert fast[col].tolist() == slow[col].tolist(), col
-    assert fast["N"].astype("Int64").tolist() == slow["N"].astype("Int64").tolist()
+    assert fast["Variable"].tolist() == sorted(RVS)
     # the unmapped variable has no fit; every other one converged, and the
     # w2 variables report the rows dropped for a missing weight
     by_var = fast.set_index("Variable")
@@ -254,14 +237,81 @@ def test_batched_routes_match_grouped_kernel(tables, route_calls, design, outcom
     assert by_var.drop(index="c3")["Converged"].all()
     assert re.fullmatch(r"w2 \(\d+ observations are missing weights\)", by_var.loc["c2", "Weight"])
     assert by_var.loc["c1", "Weight"] == "w1"
+    if outcome == "yb":  # the run above was the grouped kernel already
+        return
 
-    irls = (fast["Variable_type"] == "continuous").to_numpy() & (outcome == "yb")
+    route_calls.clear()
+    slow = _canonical(_study(cf, design_df, design, outcome, False))
+    assert route_calls == [("grouped", None, sorted(RVS))]
+    assert slow["Variable"].tolist() == sorted(RVS)
+    for col in ("Outcome", "Category", "Variable_type", "Weight", "Converged"):
+        assert fast[col].tolist() == slow[col].tolist(), col
+    assert fast["N"].astype("Int64").tolist() == slow["N"].astype("Int64").tolist()
     for col in ("Beta", "SE", "Beta_pvalue", "LRT_pvalue", "Diff_AIC", "pvalue"):
         a = fast[col].to_numpy(dtype=float)
         b = slow[col].to_numpy(dtype=float)
-        for mask, rtol in ((irls, RTOL_IRLS), (~irls, RTOL_CELLS_AND_GRAMS)):
-            assert np.allclose(a[mask], b[mask], rtol=rtol, atol=1e-12, equal_nan=True), (
-                col,
-                a[mask],
-                b[mask],
-            )
+        assert np.allclose(a, b, rtol=RTOL_GRAMS, atol=1e-12, equal_nan=True), (col, a, b)
+
+
+def _reference_logistic(design: str) -> dict[str, tuple[float, float]]:
+    """(Beta, SE) of ``yb ~ 1 + sex + grp + variable`` for c1, c2 and b1,
+    computed from the raw rows with numpy alone: Newton-Raphson on the
+    weighted log-likelihood, then the Stata linearized sandwich — PSU
+    score totals over the FULL design (a PSU with no fitted rows has a
+    zero total), centred within stratum and scaled by n_h / (n_h - 1)."""
+    data_rows, design_rows = _tables(N_ROWS)
+    pdf = pd.DataFrame(data_rows, columns=[f.name for f in DATA_SCHEMA.fields])
+    dpdf = pd.DataFrame(design_rows, columns=[f.name for f in DESIGN_SCHEMA.fields])
+    strat = dpdf["strat"].to_numpy()
+    # cluster_stata nests the PSUs in their strata; strata-only designs
+    # make every row its own PSU
+    psu = strat * 3 + dpdf["psu"].to_numpy() if design == "cluster_stata" else np.arange(N_ROWS)
+    y = (pdf["yb"] == "Case").to_numpy(dtype=float)
+    base = np.column_stack(
+        [
+            np.ones(N_ROWS),
+            pdf["sex"] == "m",
+            pdf["grp"] == "g2",
+            pdf["grp"] == "g3",
+        ]
+    ).astype(float)
+    out = {}
+    for var, value in (
+        ("c1", pdf["c1"].to_numpy(dtype=float)),
+        ("c2", pdf["c2"].to_numpy(dtype=float)),
+        ("b1", np.where(pdf["b1"].isna(), np.nan, (pdf["b1"] == "yes").astype(float))),
+    ):
+        w_all = dpdf[WEIGHTS[var]].to_numpy(dtype=float)
+        fit = ~np.isnan(value) & ~np.isnan(w_all)
+        X = np.column_stack([base, value])[fit]
+        yf, w = y[fit], w_all[fit]
+        beta = np.zeros(X.shape[1])
+        for _ in range(100):
+            mu = 1.0 / (1.0 + np.exp(-X @ beta))
+            info = X.T @ (X * (w * mu * (1.0 - mu))[:, None])
+            step = np.linalg.solve(info, X.T @ (w * (yf - mu)))
+            beta = beta + step
+            if np.abs(step).max() < 1e-12:
+                break
+        mu = 1.0 / (1.0 + np.exp(-X @ beta))
+        bread = np.linalg.inv(X.T @ (X * (w * mu * (1.0 - mu))[:, None]))
+        scores = np.zeros((N_ROWS, X.shape[1]))
+        scores[fit] = (w * (yf - mu))[:, None] * X
+        totals = pd.DataFrame(scores).groupby([strat, psu]).sum()
+        meat = np.zeros((X.shape[1], X.shape[1]))
+        for _, t in totals.groupby(level=0):
+            nh = len(t)
+            c = t.to_numpy() - t.to_numpy().mean(axis=0)
+            meat += nh / (nh - 1.0) * c.T @ c
+        vcov = bread @ meat @ bread
+        out[var] = (beta[-1], float(np.sqrt(vcov[-1, -1])))
+    return out
+
+
+@pytest.mark.parametrize("design", ["cluster_stata", "strata_only"])
+def test_survey_logistic_matches_numpy_reference(tables, design):
+    cf, design_df = tables
+    got = _study(cf, design_df, design, "yb", True).set_index("Variable")
+    for var, (beta, se) in _reference_logistic(design).items():
+        assert got.loc[var, "Beta"] == pytest.approx(beta, rel=RTOL_IRLS), var
+        assert got.loc[var, "SE"] == pytest.approx(se, rel=RTOL_IRLS), var
