@@ -375,29 +375,6 @@ def association_study_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("Variable")
 
 
-def association_study_columnar_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same fan-out via the columnar strategy (one distributed ML-GLM job
-    per variable — the >10^7-rows-per-variable path); same regr_slope
-    oracle, rounded to 4 decimals (IRLS vs closed-form agree ~1e-9)."""
-    li = _t(spark, sf_dir, "lineitem")
-    cf = ClariteFrame(
-        li.select(
-            F.monotonically_increasing_id().alias("ID"),
-            "l_extendedprice",
-            "l_quantity",
-            "l_discount",
-            "l_tax",
-        )
-    )
-    cf = modify.make_continuous(cf, only=["l_extendedprice", "l_quantity", "l_discount", "l_tax"])
-    res = analyze.association_study(
-        cf, outcomes="l_extendedprice", min_n=10, strategy="columnar"
-    )
-    return res.select(
-        "Variable", "Outcome", "N", F.round("Beta", 4).alias("Beta")
-    ).orderBy("Variable")
-
-
 def association_study_covariates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Covariate-adjusted fan-out incl. a categorical RV (LRT).  Gaussian
     fits are closed-form OLS, so the DuckDB oracle recomputes Beta/SE/
@@ -2932,7 +2909,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall_binary_embeddings": ann_recall_binary_embeddings,
         "rank_eval_macro_embeddings": rank_eval_macro_embeddings,
         "association_study_lineitem": association_study_lineitem,
-        "association_study_columnar_lineitem": association_study_columnar_lineitem,
         "association_study_covariates": association_study_covariates,
         "association_study_weighted_orders": association_study_weighted_orders,
         "glm_logistic_orders": glm_logistic_orders,
@@ -6304,16 +6280,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "association_study_lineitem": """
             SELECT Variable, Outcome, N, round(Beta, 6) AS Beta FROM (
-              SELECT 'l_quantity' AS Variable, 'l_extendedprice' AS Outcome,
-                     count(*) AS N, regr_slope(l_extendedprice, l_quantity) AS Beta FROM lineitem
-              UNION ALL
-              SELECT 'l_discount', 'l_extendedprice', count(*), regr_slope(l_extendedprice, l_discount) FROM lineitem
-              UNION ALL
-              SELECT 'l_tax', 'l_extendedprice', count(*), regr_slope(l_extendedprice, l_tax) FROM lineitem
-            ) ORDER BY Variable
-        """,
-        "association_study_columnar_lineitem": """
-            SELECT Variable, Outcome, N, round(Beta, 4) AS Beta FROM (
               SELECT 'l_quantity' AS Variable, 'l_extendedprice' AS Outcome,
                      count(*) AS N, regr_slope(l_extendedprice, l_quantity) AS Beta FROM lineitem
               UNION ALL

@@ -45,13 +45,6 @@ parse. The result (one row per variable, <=10^6 rows) is sorted on ONE
 partition (``catalog.sort_result``): a global ``orderBy`` would plan a
 range exchange whose sampling job runs the whole fan-out a second time.
 
-When one block's rows x 64 values outgrow a Python worker (the 100-TB
-regime), ``strategy="columnar"`` — one Spark ML
-``GeneralizedLinearRegression`` job per variable scheduled from a driver
-thread pool over column-sliced DataFrames — keeps the same result
-schema; the block layout is the default because EWAS tables are wide
-(10^3 columns) and short-ish.
-
 Kernel inputs that are identical across groups (covariate types/levels,
 family, min_n) ride along as a tiny closure-captured dict (broadcast by
 task serialization, ≈KBs).
@@ -827,8 +820,6 @@ def association_study(
     regression_kind: str | None = None,
     encoding: str = "additive",
     edge_encoding_info=None,
-    strategy: str = "grouped",
-    max_concurrent_jobs: int = 8,
     use_sufficient_stats: bool = True,
     vcov_method: str = "stata",
 ) -> DataFrame:
@@ -855,13 +846,6 @@ def association_study(
     aggregations; False sends every variable to the grouped tail. A
     survey-weighted binomial study has no batched route, so the grouped
     tail fits it either way.
-
-    ``strategy``: ``"grouped"`` (default) = batched aggregations plus
-    ``groupBy(variable block).applyInPandas`` — right for wide/short EWAS
-    tables; ``"columnar"`` = one distributed ML-GLM job per variable
-    scheduled from a driver thread pool (``max_concurrent_jobs``) — the
-    100-TB path where a variable's rows exceed one worker's memory
-    (SURVEY.md §7 risk #4). Same result schema; unweighted studies only.
     """
     custom_kernel_factory = None
     if callable(regression_kind):
@@ -884,10 +868,6 @@ def association_study(
         raise ValueError("vcov_method='jackknife' requires a cluster survey design")
     if regression_kind == "weighted_glm" and survey_design_spec is None:
         raise ValueError("A 'survey_design_spec' must be provided")
-    if strategy not in ("grouped", "columnar"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "columnar" and survey_design_spec is not None:
-        raise ValueError("strategy='columnar' does not support survey designs (use grouped)")
     if isinstance(outcomes, str):
         outcomes = [outcomes]
     covariates = list(covariates or [])
@@ -947,25 +927,6 @@ def association_study(
             if family == GAUSSIAN:
                 z_cols.append(outcome)
             df = _zscore_columns(df, z_cols)
-
-        if strategy == "columnar":
-            from clarite_python_spark.operators.analyze_columnar import (
-                columnar_association_study,
-            )
-
-            pdf = columnar_association_study(
-                df,
-                outcome,
-                my_rvs,
-                rv_types,
-                covariates,
-                covar_types,
-                family,
-                min_n,
-                max_concurrent_jobs,
-            )
-            results.append(data.df.sparkSession.createDataFrame(pdf, RESULT_SCHEMA))
-            continue
 
         id_vars = [ID_COL, outcome, *covariates]
         kernel_args = (

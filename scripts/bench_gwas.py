@@ -6,8 +6,12 @@ commented out there) — through both binomial execution paths:
 - contingency sufficient-stats (default): one unpivot->count aggregation
   (map-side combine => shuffle carries #SNPs x ~6 cells), freq-weighted
   IRLS driver-side with iterates identical to the row-level kernel;
-- grouped kernel (``use_sufficient_stats=False``): melt + shuffle of
-  rows x SNPs into per-variable Python workers.
+- grouped kernel (``use_sufficient_stats=False``): each row ships once
+  per block of <=64 SNPs to ``groupBy(block).applyInPandas`` Python
+  workers.
+
+Each path runs once cold, then twice warm (the min is reported). The
+script asserts that both paths give the same Beta to 1e-8.
 
 Usage: python scripts/bench_gwas.py [n_rows] [n_snps]
 Prints one JSON line with wall seconds for both paths.
@@ -61,17 +65,30 @@ def main() -> None:
     cf = modify.make_binary(cf, only=["Outcome"])
     cf = modify.make_genotypes(cf, {nm: ("A", "T") for nm in names})
 
-    def run() -> tuple[float, int]:
+    def run(use_sufficient_stats: bool) -> tuple[float, pd.DataFrame]:
         t0 = time.perf_counter()
         res = analyze.association_study(
-            cf, outcomes="Outcome", min_n=50, encoding="additive"
-        )
-        n_rows = res.count()
-        return time.perf_counter() - t0, n_rows
+            cf,
+            outcomes="Outcome",
+            min_n=50,
+            encoding="additive",
+            use_sufficient_stats=use_sufficient_stats,
+        ).toPandas()
+        return time.perf_counter() - t0, res.set_index("Variable").sort_index()
 
-    cold, n_rows = run()  # includes codegen/Arrow/Python-worker warm-up
-    # shared-machine single-shot variance is +-50%; report the min of two
-    warm = min(run()[0], run()[0])
+    def timed(use_sufficient_stats: bool) -> tuple[float, float, pd.DataFrame]:
+        # the cold run includes codegen/Arrow/Python-worker warm-up;
+        # shared-machine single-shot variance is +-50%: min of two warm
+        cold, res = run(use_sufficient_stats)
+        warm = min(run(use_sufficient_stats)[0], run(use_sufficient_stats)[0])
+        return cold, warm, res
+
+    cold, warm, suff = timed(True)
+    tail_cold, tail_warm, tail = timed(False)
+    assert list(suff.index) == list(tail.index)
+    beta_diff = float(np.nanmax(np.abs(suff["Beta"] - tail["Beta"])))
+    se_diff = float(np.nanmax(np.abs(suff["SE"] - tail["SE"])))
+    assert beta_diff <= 1e-8, f"paths disagree: max |dBeta| = {beta_diff:.3g}"
 
     print(
         json.dumps(
@@ -80,10 +97,14 @@ def main() -> None:
                 "value": round(warm, 3),
                 "unit": "sec",
                 "cold_sec": round(cold, 3),
+                "grouped_tail_sec": round(tail_warm, 3),
+                "grouped_tail_cold_sec": round(tail_cold, 3),
+                "max_abs_beta_diff": beta_diff,
+                "max_abs_se_diff": se_diff,
                 "n_obs": n,
                 "n_snps": p,
                 "fits_per_sec": round(p / warm, 1),
-                "result_rows": n_rows,
+                "result_rows": len(suff),
             }
         )
     )

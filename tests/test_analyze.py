@@ -4,6 +4,8 @@ The numeric oracle is a driver-side numpy fit over the same pandas data —
 i.e. the distributed applyInPandas fan-out must reproduce the
 single-machine math exactly."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -67,6 +69,85 @@ def test_association_study_binary_outcome(ewas_cf):
     assert out.loc["signal", "pvalue"] < 1e-6
     assert out.loc["outcome", "pvalue"] < 1e-10  # outcome itself is a strong predictor
     assert bool(out.loc["signal", "Converged"])
+
+
+def _t_two_sided_p(t: float, df: float) -> float:
+    """2 P(T > |t|) by Simpson quadrature of the Student-t density over
+    [|t|, |t| + 60]; past that the density is below 1e-300 at the
+    residual dfs used here (~1,000)."""
+    x = np.linspace(abs(t), abs(t) + 60.0, 120_001)
+    log_c = math.lgamma((df + 1) / 2) - math.lgamma(df / 2) - 0.5 * math.log(df * math.pi)
+    f = np.exp(log_c - (df + 1) / 2 * np.log1p(x * x / df))
+    h = x[1] - x[0]
+    return float(2 * h / 3 * (f[0] + f[-1] + 4 * f[1:-1:2].sum() + 2 * f[2:-1:2].sum()))
+
+
+def _reference_glm(X: np.ndarray, y: np.ndarray, family: str):
+    """(beta, se, Wald p-values, llf) of one GLM, written out here rather
+    than taken from ``functions/glm.py``. Gaussian: least squares, t
+    tests, llf at scale RSS/df_resid. Logistic: Newton-Raphson, SE from
+    (X'WX)^-1, z tests."""
+    n, p = X.shape
+    if family == "gaussian":
+        beta = np.linalg.lstsq(X, y, rcond=None)[0]
+        df_resid = n - p
+        scale = float(((y - X @ beta) ** 2).sum()) / df_resid
+        se = np.sqrt(scale * np.diag(np.linalg.inv(X.T @ X)))
+        pvals = [_t_two_sided_p(b / s, df_resid) for b, s in zip(beta, se)]
+        llf = -0.5 * (df_resid + n * math.log(2 * math.pi * scale))
+        return beta, se, pvals, llf
+    beta = np.zeros(p)
+    for _ in range(100):
+        mu = 1.0 / (1.0 + np.exp(-X @ beta))
+        step = np.linalg.solve(X.T @ (X * (mu * (1 - mu))[:, None]), X.T @ (y - mu))
+        beta = beta + step
+        if np.max(np.abs(step)) < 1e-13:
+            break
+    mu = 1.0 / (1.0 + np.exp(-X @ beta))
+    se = np.sqrt(np.diag(np.linalg.inv(X.T @ (X * (mu * (1 - mu))[:, None]))))
+    pvals = [math.erfc(abs(b / s) / math.sqrt(2)) for b, s in zip(beta, se)]
+    llf = float(np.sum(y * np.log(mu) + (1 - y) * np.log1p(-mu)))
+    return beta, se, pvals, llf
+
+
+@pytest.mark.parametrize("outcome", ["outcome", "outcome_bin"])
+def test_association_study_matches_independent_reference(ewas_cf, ewas_pdf, outcome):
+    """End-to-end numbers (default routes: ``olsagg`` for the Gaussian
+    study, the grouped tail for the logistic one) equal a numpy
+    reference that does not call the engine's fitter: Wald Beta/SE/p of
+    the continuous variables and the LRT of the 3-level ``cat_var``."""
+    got = analyze.association_study(
+        ewas_cf,
+        outcomes=outcome,
+        regression_variables=["signal", "noise1", "noise2", "cat_var"],
+        covariates=["age", "sex"],
+        min_n=50,
+    ).toPandas().set_index("Variable")
+    pdf = ewas_pdf
+    if outcome == "outcome":
+        family, y = "gaussian", pdf["outcome"].to_numpy(float)
+    else:  # Case = 1, as _encode_binary_outcome maps it
+        family, y = "binomial", (pdf["outcome_bin"] == "Case").to_numpy(float)
+    base = np.column_stack(
+        [np.ones(len(pdf)), pdf["age"], (pdf["sex"] == "M").to_numpy(float)]
+    )
+    for rv in ("signal", "noise1", "noise2"):
+        beta, se, pvals, _ = _reference_glm(np.column_stack([base, pdf[rv]]), y, family)
+        assert got.loc[rv, "N"] == len(pdf)
+        assert got.loc[rv, "Beta"] == pytest.approx(beta[-1], rel=1e-6)
+        assert got.loc[rv, "SE"] == pytest.approx(se[-1], rel=1e-6)
+        assert got.loc[rv, "pvalue"] == pytest.approx(pvals[-1], rel=1e-6, abs=1e-300)
+
+    dummies = np.column_stack([(pdf["cat_var"] == lv).to_numpy(float) for lv in ("B", "C")])
+    llf_f = _reference_glm(np.column_stack([base, dummies]), y, family)[3]
+    llf_r = _reference_glm(base, y, family)[3]
+    stat = 2 * (llf_f - llf_r)
+    diff_aic = (-2 * llf_f + 2 * 5) - (-2 * llf_r + 2 * 3)
+    # chi-square survival function at df = 2 is exactly exp(-stat / 2)
+    assert got.loc["cat_var", "LRT_pvalue"] == pytest.approx(
+        math.exp(-stat / 2), rel=1e-6, abs=1e-300
+    )
+    assert got.loc["cat_var", "Diff_AIC"] == pytest.approx(diff_aic, rel=1e-6)
 
 
 def test_min_n_gate(ewas_cf):
