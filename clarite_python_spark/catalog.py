@@ -20,9 +20,11 @@ import json
 from dataclasses import dataclass, field
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # CLARITE variable-type taxonomy (reference utilities.py:93-141)
 CONSTANT = "constant"
@@ -92,6 +94,29 @@ def sort_result(df: DataFrame, *order) -> DataFrame:
     per-partition sort. (Not ``coalesce(1)``: that would push one-task
     parallelism down into the kernel's stage.)"""
     return df.repartition(1).sortWithinPartitions(*order)
+
+
+def local_frame(rows: Sequence, schema: "str | T.StructType") -> DataFrame:
+    """Driver-built result rows (tuples in field order, or dicts by
+    field name) as a ``LocalRelation`` with exactly ``schema``'s types.
+
+    ``createDataFrame`` over a Python list plans an RDD scan, so every
+    collect of it runs a Python-worker job (~0.4 s); over a
+    ``pyarrow.Table`` it builds a local relation, which collects, and
+    folds projections such as ``CAST``, without any job. NaN and null
+    both survive. Sort the rows before building the frame: a sort or
+    ``sort_result`` over a local relation would plan an exchange."""
+    spark = SparkSession.active()
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    rows = [[r.get(n) for n in names] if isinstance(r, dict) else r for r in rows]
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [[] for _ in names]
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=t) for c, t in zip(columns, arrow.types)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 @dataclass
@@ -182,6 +207,9 @@ class ClariteFrame:
 
     df: DataFrame
     catalog: VariableCatalog = field(default_factory=VariableCatalog)
+    # column statistics of this frame state (functions/profile.py);
+    # with_df drops it, select_variables restricts it
+    profile: object = field(default=None, repr=False, compare=False)
 
     def __post_init__(self) -> None:
         if ID_COL not in self.df.columns:
@@ -204,9 +232,12 @@ class ClariteFrame:
         return ClariteFrame(df, cat)
 
     def select_variables(self, cols: Sequence[str]) -> "ClariteFrame":
-        return self.with_df(
+        out = self.with_df(
             self.df.selectExpr(qname(ID_COL), *[f"{qname(c)} AS {qname(c)}" for c in cols])
         )
+        if self.profile is not None:
+            out.profile = self.profile.restrict(cols)
+        return out
 
     def category_levels(self, col: str) -> list:
         """Sorted distinct non-null levels; cached in the catalog.

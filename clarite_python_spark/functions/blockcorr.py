@@ -1,8 +1,9 @@
 """Blocked pairwise-complete Pearson correlations for wide frames.
 
-Why this exists: ``describe.correlations`` batches C(p,2) ``F.corr``
-expressions into one agg for p <= ~80; past that the quadratic
-expression count stops paying, and the previous wide fallback
+Why this exists: ``describe.correlations`` reads the pairwise-complete
+block of the frame profile (functions/profile.py) for p <= 80; that
+block is O(p²) per task and on the driver, which stops paying past a
+few hundred columns, and the previous wide fallback
 (``pyspark.ml.stat.Correlation``) both requires complete-case rows
 (a semantic difference vs the reference's pandas ``df.corr``, which is
 pairwise-complete) and materializes the full p x p matrix on the driver

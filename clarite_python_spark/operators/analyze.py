@@ -73,6 +73,7 @@ from clarite_python_spark.catalog import (
     ID_COL,
     UNKNOWN,
     ClariteFrame,
+    local_frame,
     qcol,
     qlit,
     qname,
@@ -956,7 +957,7 @@ def association_study(
                 rows, group = route(fan, group)
                 driver_rows.extend(rows)
         if driver_rows:
-            results.append(data.df.sparkSession.createDataFrame(driver_rows, RESULT_SCHEMA))
+            results.append(local_frame(driver_rows, RESULT_SCHEMA))
         if group:
             # ONE block layout covering every variable type and ONE
             # selectExpr parse: each row ships once per variable block,
@@ -1241,9 +1242,7 @@ def interaction_study(
             else:
                 chunk_rows = [_suff_chunk(s) for s in starts]
             for suff_rows in chunk_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(suff_rows, INTERACTION_SCHEMA)
-                )
+                results.append(local_frame(suff_rows, INTERACTION_SCHEMA))
         if not my_pairs:
             continue
 

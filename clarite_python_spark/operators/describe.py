@@ -1,39 +1,43 @@
 """Descriptive-statistics operators (reference ``clarite/modules/describe.py``).
 
-All are expressed as batched single-pass aggregations (one scan for any
-number of columns) followed by a driver-side or Expand-based reshape of
-the tiny (1 x N) stats row — never one job per column. Each wide
-aggregation is rendered as ONE ``selectExpr`` parse rather than one
-``Column`` per variable (each ``Column`` costs py4j round trips).
+``percent_na``, ``skewness``, ``freq_table`` and ``correlations`` (up to
+its ``_wide_limit`` continuous columns) read the frame's profile
+(functions/profile.py): ONE ``mapInArrow`` pass per frame state gives
+the counts, level histograms, central moments and the pairwise-complete
+correlation block, so the four of them scan a frame once between them,
+and not at all when the QC operator before them left a profile on it.
+Wider correlation sets take the blocked masked-Gram path
+(functions/blockcorr.py); the categorical pair measures (``cramers_v``,
+``mutual_information``, ``theils_u``) build their contingency cells in
+one exploded scan of their own.
 
-Result tables are small (one row per variable or per pair), so they are
-sorted on ONE partition: rows already on the driver are sorted in Python
-before ``createDataFrame`` (collecting them runs no Spark job), and
-Spark-side results go through ``catalog.sort_result`` — a global
-``orderBy`` would plan a range exchange whose sampling job runs the
-aggregation a second time.
+Result tables are small (one row per variable, level or pair). Rows
+computed on the driver are sorted there, in Python, and returned by
+``catalog.local_frame`` as a local relation: collecting it, or a
+projection over it, runs no Spark job. ``freq_table`` renders its values
+with Spark's ``CAST(... AS STRING)`` in such a projection, so 1e7 reads
+``1.0E7`` as it always did. The categorical pair measures stay lazy
+and end in an ``orderBy``.
 """
 
 from __future__ import annotations
 
-from itertools import combinations
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from clarite_python_spark.catalog import (
     BINARY,
     CATEGORICAL,
     CONSTANT,
     CONTINUOUS,
-    ID_COL,
     ClariteFrame,
+    local_frame,
     qcol,
-    qname,
-    sort_result,
     validate_skip_only,
 )
 from clarite_python_spark.functions.distributions import skewtest_z_p
+from clarite_python_spark.functions.profile import GRAM_LIMIT, Profile, frame_profile
 
 __all__ = [
     "correlations",
@@ -48,35 +52,40 @@ __all__ = [
 ]
 
 
-def correlations(cf: ClariteFrame, threshold: float = 0.75, _wide_limit: int = 80) -> DataFrame:
+CORRELATIONS_SCHEMA = "var1 string, var2 string, correlation double"
+FREQ_SCHEMA = "variable string, value string, count long"
+PERCENT_NA_SCHEMA = "variable string, percent_na double"
+SKEWNESS_SCHEMA = "variable string, skew double, zscore double, pvalue double"
+
+
+def correlations(cf: ClariteFrame, threshold: float = 0.75, _wide_limit: int = GRAM_LIMIT) -> DataFrame:
     """Pairwise Pearson correlations above ``threshold``
     (reference describe.py:26-75): corr matrix -> upper triangle ->
     (var1, var2, correlation) -> filter |corr| >= threshold -> sort by
     |corr| desc.
 
-    Spark plan: for up to ``_wide_limit`` numeric columns, ONE agg with
-    C(p,2) ``F.corr`` expressions — a single scan, and F.corr's pairwise
-    null handling matches pandas ``df.corr`` semantics. For wider frames
-    the quadratic expression count stops paying, and we switch to the
-    blocked masked-Gram path (functions/blockcorr.py): per block-row
-    jobs whose partial sufficient statistics are summed on executors,
-    with the threshold filter applied INSIDE the worker — the same
-    pairwise-complete semantics, no p x p matrix on the driver (or
+    For up to ``_wide_limit`` continuous columns the matrix is the
+    profile's pairwise-complete block: the same pairwise null handling
+    as pandas ``df.corr``, and NaN (so filtered out) where a column is
+    constant on the pair's rows, as pandas gives it, or holds NaN or
+    ±inf, as Spark's ``corr`` gives it. Wider frames take the blocked masked-Gram path
+    (functions/blockcorr.py): per block-row jobs whose partial
+    sufficient statistics are summed on executors, with the threshold
+    filter applied INSIDE the worker — no p x p matrix on the driver (or
     anywhere), so p = 5,000+ columns hold.
     """
     cols = [c for c in cf.variables if cf.catalog.get(c) == CONTINUOUS]
-    pairs = list(combinations(cols, 2))
-    spark = cf.df.sparkSession
-    if not pairs:
-        return spark.createDataFrame([], "var1 string, var2 string, correlation double")
+    if len(cols) < 2:
+        return local_frame([], CORRELATIONS_SCHEMA)
     if len(cols) <= _wide_limit:
-        aggs = [f"corr({qname(a)}, {qname(b)}) AS {qname(f'{a}::{b}')}" for a, b in pairs]
-        row = cf.df.selectExpr(*aggs).collect()[0]
-        data = [
-            (a, b, float(row[f"{a}::{b}"]))
-            for a, b in pairs
-            if row[f"{a}::{b}"] is not None and abs(row[f"{a}::{b}"]) >= threshold
-        ]
+        prof = frame_profile(cf, gram_cols=cols)
+        pos = {c: i for i, c in enumerate(prof.corr_cols)}
+        data = []
+        for i, a in enumerate(cols):
+            for b in cols[i + 1 :]:
+                r = float(prof.corr[pos[a], pos[b]])
+                if abs(r) >= threshold:  # False for NaN
+                    data.append((a, b, r))
     else:
         from clarite_python_spark.functions.blockcorr import block_correlations
 
@@ -84,104 +93,106 @@ def correlations(cf: ClariteFrame, threshold: float = 0.75, _wide_limit: int = 8
     # |corr| desc, then names: no NaN survives the threshold filter, and
     # Python's code-point string order equals Spark's UTF-8 byte order
     data.sort(key=lambda t: (-abs(t[2]), t[0], t[1]))
-    return spark.createDataFrame(data, "var1 string, var2 string, correlation double")
+    return local_frame(data, CORRELATIONS_SCHEMA)
 
 
 def freq_table(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     """Value counts per categorical variable (describe.py:78-135).
 
-    Categorical/binary/constant columns are unpivoted and counted in ONE
-    ``groupBy(variable, value)`` job (map-side combine keeps the shuffle at
-    |variables| x |levels| rows); non-categorical columns contribute a
-    single ``<Non-Categorical Values>`` row with their non-NA count,
-    computed in the same batched agg style."""
+    Binary/categorical/constant columns list their levels with counts,
+    from the profile's level histograms (a column with more than
+    ``LEVEL_CAP`` levels raises ``ValueError``); any other column gives
+    one ``<Non-Categorical Values>`` row with its non-NA count. Rows are
+    sorted by variable, count desc, value."""
     cols = validate_skip_only(cf.variables, skip, only)
+    if not cols:
+        return local_frame([], FREQ_SCHEMA)
     cat_cols = [c for c in cols if cf.catalog.get(c) in (BINARY, CATEGORICAL, CONSTANT)]
-    other_cols = [c for c in cols if c not in set(cat_cols)]
-    spark = cf.df.sparkSession
-    parts = []
-    if cat_cols:
-        long = cf.df.selectExpr(
-            *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in cat_cols]
-        ).unpivot([], None, "variable", "value")
-        parts.append(
-            long.where(F.col("value").isNotNull())
-            .groupBy("variable", "value")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-    if other_cols:
-        row = cf.df.selectExpr(*[f"count({qname(c)}) AS {qname(c)}" for c in other_cols])
-        counts = row.unpivot([], None, "variable", "count").select(
-            "variable", F.lit("<Non-Categorical Values>").alias("value"), F.col("count")
-        )
-        parts.append(counts)
-    if not parts:
-        return spark.createDataFrame([], "variable string, value string, count long")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return sort_result(out, "variable", F.col("count").desc(), "value")
+    prof = frame_profile(cf)
+    hist = prof.level_counts(cat_cols)
+    rendered = _render_levels(prof, hist)
+    rows = [(c, "<Non-Categorical Values>", prof.nonnull[c]) for c in cols if c not in hist]
+    for c, levels in hist.items():
+        rows += [(c, s, k) for s, (_, k) in zip(rendered[c], levels)]
+    rows.sort(key=lambda r: (r[0], -r[2], r[1]))
+    return local_frame(rows, FREQ_SCHEMA)
+
+
+def _render_levels(prof: Profile, hist: dict) -> dict:
+    """Each level as Spark's ``CAST(... AS STRING)`` renders it: one
+    projection over a local relation of the levels (a column per value
+    type), which runs no job."""
+    if not any(hist.values()):
+        return {c: [] for c in hist}
+    slot: dict[str, int] = {}
+    fields = []
+    for c in hist:
+        key = prof.dtypes[c].simpleString()
+        if key not in slot:
+            slot[key] = len(fields)
+            fields.append(T.StructField(f"_{len(fields)}", prof.dtypes[c]))
+    rows, owner = [], []
+    for c, levels in hist.items():
+        i = slot[prof.dtypes[c].simpleString()]
+        for v, _ in levels:
+            row = [None] * len(fields)
+            row[i] = v
+            rows.append(row)
+            owner.append((c, i))
+    out = local_frame(rows, T.StructType(fields)).selectExpr(
+        *[f"CAST(_{i} AS STRING) AS _{i}" for i in range(len(fields))]
+    )
+    rendered: dict[str, list] = {c: [] for c in hist}
+    for (c, i), r in zip(owner, out.collect()):
+        rendered[c].append(r[i])
+    return rendered
 
 
 def get_types(cf: ClariteFrame) -> DataFrame:
     """CLARITE type per variable (describe.py:138-163) — catalog lookup,
     no data scan."""
-    spark = cf.df.sparkSession
-    data = [(c, cf.catalog.get(c)) for c in cf.variables]
-    return spark.createDataFrame(data, "variable string, type string")
+    return local_frame([(c, cf.catalog.get(c)) for c in cf.variables], "variable string, type string")
 
 
 def percent_na(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
-    """Percent NA per variable (describe.py:166-194, kernel :191).
-    One agg scan, reshaped with a 1-row unpivot."""
+    """Percent NA per variable (describe.py:166-194, kernel :191), from
+    the profile's counts: ``(1.0 - n / rows) * 100.0``, the operation
+    order Spark's ``count(c) / count(1)`` had, and NaN for every
+    variable of an empty frame (pandas' 0/0)."""
     cols = validate_skip_only(cf.variables, skip, only)
-    # 1.0D / 100.0D: a bare 1.0 is a DECIMAL literal in Spark SQL
-    row = cf.df.selectExpr(
-        *[f"((1.0D - (count({qname(c)}) / count(1))) * 100.0D) AS {qname(c)}" for c in cols]
-    )
-    return sort_result(row.unpivot([], None, "variable", "percent_na"), "variable")
+    if not cols:
+        return local_frame([], PERCENT_NA_SCHEMA)
+    prof = frame_profile(cf)
+    nan = float("nan")
+    data = [(c, (1.0 - prof.nonnull[c] / prof.rows) * 100.0 if prof.rows else nan) for c in sorted(cols)]
+    return local_frame(data, PERCENT_NA_SCHEMA)
 
 
 def skewness(cf: ClariteFrame, dropna: bool = True, skip=None, only=None) -> DataFrame:
     """Skew + D'Agostino skew-test z and two-sided p per continuous
     variable (describe.py:197-253, kernels :244-248).
 
-    ``F.skewness`` computes the population g1 = m3/m2^1.5 — the same
-    statistic scipy's ``skew(bias=True)`` default returns. The skew-test
-    z/p are closed-form functions of (g1, n), evaluated driver-side from
-    the single aggregated stats row (see functions/distributions.py).
-    With ``dropna=False`` any NA in the column makes the result NaN
-    (scipy nan_policy='propagate')."""
+    The skew is Spark's ``skewness``, the population g1 = m3/m2^1.5 —
+    the statistic scipy's ``skew(bias=True)`` default returns — from the
+    profile's merged central moments. The skew-test z/p are closed-form
+    functions of (g1, n), evaluated driver-side (see
+    functions/distributions.py). With ``dropna=False`` any NA in the
+    column makes the result NaN (scipy nan_policy='propagate')."""
     cols = [c for c in validate_skip_only(cf.variables, skip, only) if cf.catalog.get(c) == CONTINUOUS]
-    spark = cf.df.sparkSession
     if not cols:
-        return spark.createDataFrame(
-            [], "variable string, skew double, zscore double, pvalue double"
-        )
-    row = (
-        cf.df.selectExpr(
-            *[f"skewness({qname(c)}) AS {qname('g1::' + c)}" for c in cols],
-            *[f"count({qname(c)}) AS {qname('n::' + c)}" for c in cols],
-            "count(1) AS `n::__rows__`",
-        )
-        .collect()[0]
-        .asDict()
-    )
+        return local_frame([], SKEWNESS_SCHEMA)
+    prof = frame_profile(cf, moment_cols=cols)
+    nan = float("nan")
     data = []
-    for c in cols:
-        g1, n = row[f"g1::{c}"], row[f"n::{c}"]
-        if not dropna and n < row["n::__rows__"]:
-            data.append((c, float("nan"), float("nan"), float("nan")))
-            continue
-        if g1 is None or n is None or n < 8:
-            data.append((c, float(g1) if g1 is not None else float("nan"), float("nan"), float("nan")))
-            continue
-        z, p = skewtest_z_p(float(g1), int(n))
-        data.append((c, float(g1), z, p))
-    data.sort(key=lambda t: t[0])
-    return spark.createDataFrame(
-        data, "variable string, skew double, zscore double, pvalue double"
-    )
+    for c in sorted(cols):
+        g1, n = prof.skewness(c), prof.nonnull[c]
+        if not dropna and n < prof.rows:
+            data.append((c, nan, nan, nan))
+        elif g1 is None or n < 8:
+            data.append((c, nan if g1 is None else g1, nan, nan))
+        else:
+            data.append((c, g1, *skewtest_z_p(g1, n)))
+    return local_frame(data, SKEWNESS_SCHEMA)
 
 
 def summarize(cf: ClariteFrame) -> dict:
@@ -277,12 +288,8 @@ def cramers_v(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     cat_cols = [
         c for c in cols if cf.catalog.get(c) in (BINARY, CATEGORICAL, CONSTANT)
     ]
-    spark = cf.df.sparkSession
     if len(cat_cols) < 2:
-        return spark.createDataFrame(
-            [],
-            "var1 string, var2 string, n long, chi2 double, cramers_v double",
-        )
+        return local_frame([], "var1 string, var2 string, n long, chi2 double, cramers_v double")
     cells = _pair_cell_table(cf, cat_cols)
     ra = cells.groupBy("var1", "var2", "va").agg(F.sum("o").alias("ra"))
     cb = cells.groupBy("var1", "var2", "vb").agg(F.sum("o").alias("cb"))
@@ -387,10 +394,7 @@ def mutual_information(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     """
     out = _pairwise_mi(cf, skip, only)
     if out is None:
-        return cf.df.sparkSession.createDataFrame(
-            [],
-            "var1 string, var2 string, n long, mi double, nmi double",
-        )
+        return local_frame([], "var1 string, var2 string, n long, mi double, nmi double")
     hmin = F.least("__h_ra", "__h_cb")
     return out.select(
         "var1",
@@ -416,10 +420,9 @@ def theils_u(cf: ClariteFrame, skip=None, only=None) -> DataFrame:
     """
     out = _pairwise_mi(cf, skip, only)
     if out is None:
-        return cf.df.sparkSession.createDataFrame(
+        return local_frame(
             [],
-            "var1 string, var2 string, n long, "
-            "u_var1_given_var2 double, u_var2_given_var1 double",
+            "var1 string, var2 string, n long, u_var1_given_var2 double, u_var2_given_var1 double",
         )
     return out.select(
         "var1",

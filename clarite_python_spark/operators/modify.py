@@ -2,13 +2,22 @@
 
 Design rules (SURVEY.md §7):
 
-- every column-statistic operator does its data pass as ONE batched
-  ``agg`` with N expressions, regardless of column count — whole-stage
-  codegen vectorizes the expression list, so cost is one scan;
+- column statistics come from the frame's profile
+  (functions/profile.py): ONE ``mapInArrow`` pass per frame state gives
+  every column's counts, level histogram and cast failures, so
+  ``categorize`` and the column filters, and the describe operators
+  after them, share one scan instead of one aggregate each;
+  ``categorize`` always scans its input, the filters reuse the profile
+  it attaches (``select_variables`` keeps it for the survivors);
+- the other column-statistic operators (``make_*``,
+  ``colfilter_percent_zero``, ``remove_outliers``) still run ONE batched
+  aggregate with N expressions, rendered as one ``selectExpr`` parse;
 - decisions (which columns survive) are driver-side over the tiny
-  (1 x N-columns) stats row; the data plan stays lazy;
+  per-column statistics; the data plan stays lazy;
 - value rewrites (recode, outliers) avoid driver collects where possible
-  by broadcast-joining the 1-row stats frame back onto the data;
+  by broadcast-joining the 1-row stats frame back onto the data; a row
+  filter or value rewrite returns a frame without a profile, so the
+  next reader profiles the new state;
 - each operator returns a new ``ClariteFrame`` and attaches a
   ``last_report`` dict mirroring the counts the reference prints eagerly
   via ``print_wrap`` (utilities.py:13-23) — the log IS the spec in the
@@ -39,6 +48,7 @@ from clarite_python_spark.catalog import (
     qname,
     validate_skip_only,
 )
+from clarite_python_spark.functions.profile import LEVEL_CAP, compute_profile, frame_profile
 
 __all__ = [
     "categorize",
@@ -89,41 +99,31 @@ def categorize(cf: ClariteFrame, cat_min: int = 3, cat_max: int = 6, cont_min: i
                                     unknown ("couldn't convert",
                                     modify.py:118-125)
 
-    Spark plan: ONE agg scan computing (count, count_distinct, numeric
-    try_cast failure count) for all columns — three expressions per column
-    in a single pass, no per-column jobs. Categorical level sets are
-    collected in the same pass via ``collect_set`` only for columns that
-    end up binary/categorical (second cheap pass over <=cat_max-distinct
-    columns). Each wide plan is rendered as ONE ``selectExpr`` parse.
+    Spark plan: ONE profile pass over the input (functions/profile.py)
+    gives each column's non-null count, its level histogram (exact up to
+    ``LEVEL_CAP`` levels, which is also where the levels of the
+    constant/binary/categorical columns come from) and its count of
+    non-null values failing Spark's numeric cast. The input is always
+    scanned, and the profile is attached to the output frame, never to
+    ``cf``. ``cont_min`` and ``cat_max`` above ``LEVEL_CAP`` raise
+    ``ValueError``: the histogram cannot tell those counts apart.
     """
+    if max(cont_min, cat_max) > LEVEL_CAP:
+        raise ValueError(f"cont_min and cat_max must be at most LEVEL_CAP = {LEVEL_CAP}")
     df = cf.df
     cols = cf.variables
-    numeric = {f.name for f in df.schema.fields if _is_numeric(f.dataType)}
-    aggs: list[str] = []
-    for c in cols:
-        q = qname(c)
-        aggs.append(f"count({q}) AS {qname('n::' + c)}")
-        aggs.append(f"count(DISTINCT {q}) AS {qname('d::' + c)}")
-        # non-null values that fail a numeric cast — physically numeric
-        # columns can't fail, so skip the (expensive) string round-trip
-        if c in numeric:
-            aggs.append(f"0 AS {qname('bad::' + c)}")
-        else:
-            aggs.append(
-                f"sum(CAST(({q} IS NOT NULL AND try_cast(CAST({q} AS STRING) AS DOUBLE) IS NULL)"
-                f" AS BIGINT)) AS {qname('bad::' + c)}"
-            )
-    stats = df.selectExpr(*aggs).collect()[0].asDict()
+    numeric = [f.name for f in df.schema.fields if _is_numeric(f.dataType)]
+    prof = compute_profile(df, cols, moment_cols=numeric)
 
     catalog = VariableCatalog()
     keep: list[str] = []
     dropped: list[str] = []
     for c in cols:
-        n, d, bad = stats[f"n::{c}"], stats[f"d::{c}"], stats[f"bad::{c}"] or 0
-        if n == 0:
+        if prof.nonnull[c] == 0:
             dropped.append(c)
             continue
         keep.append(c)
+        d, bad = prof.distinct(c), prof.bad.get(c, 0)
         if d == 1:
             catalog.set(c, CONSTANT)
         elif d == 2:
@@ -134,20 +134,13 @@ def categorize(cf: ClariteFrame, cat_min: int = 3, cat_max: int = 6, cont_min: i
             catalog.set(c, CONTINUOUS if bad == 0 else UNKNOWN)
         else:
             catalog.set(c, UNKNOWN)
-
-    # cache category levels for the small-cardinality columns in one pass
-    small = catalog.of_type(CONSTANT, BINARY, CATEGORICAL)
-    if small:
-        level_rows = (
-            df.selectExpr(*[f"collect_set({qname(c)}) AS {qname(c)}" for c in small])
-            .collect()[0]
-            .asDict()
-        )
-        for c in small:
-            catalog.categories[c] = sorted(level_rows[c])
+    for c in catalog.of_type(CONSTANT, BINARY, CATEGORICAL):
+        catalog.categories[c] = prof.levels(c)
 
     out = ClariteFrame(
-        df.selectExpr(qname(ID_COL), *[f"{qname(c)} AS {qname(c)}" for c in keep]), catalog
+        df.selectExpr(qname(ID_COL), *[f"{qname(c)} AS {qname(c)}" for c in keep]),
+        catalog,
+        prof.restrict(keep),
     )
     counts = {t: len(catalog.of_type(t)) for t in (CONSTANT, BINARY, CATEGORICAL, CONTINUOUS, UNKNOWN)}
     return _report(out, {"dropped_all_na": dropped, "type_counts": counts})
@@ -284,11 +277,11 @@ def colfilter(cf: ClariteFrame, skip=None, only=None) -> ClariteFrame:
 
 def colfilter_min_n(cf: ClariteFrame, n: int = 200, skip=None, only=None) -> ClariteFrame:
     """Drop variables with fewer than ``n`` non-NA values
-    (modify.py:284-340). One agg scan for all candidate columns."""
+    (modify.py:284-340). Reads the non-null counts of the frame's
+    profile (one pass, shared with the other column readers)."""
     cols = validate_skip_only(cf.variables, skip, only)
-    counts = (
-        cf.df.selectExpr(*[f"count({qname(c)}) AS {qname(c)}" for c in cols]).collect()[0].asDict()
-    )
+    prof = frame_profile(cf)
+    counts = {c: prof.nonnull[c] for c in cols}
     dropped = sorted(c for c in cols if counts[c] < n)
     keep = [c for c in cf.variables if c not in set(dropped)]
     return _colfilter_result(cf, keep, dropped, {"non_na_counts": counts})
@@ -298,28 +291,16 @@ def colfilter_min_cat_n(cf: ClariteFrame, n: int = 200, skip=None, only=None) ->
     """Drop binary/categorical variables whose least frequent level occurs
     fewer than ``n`` times (modify.py:229-280, kernel :268).
 
-    Spark plan: melt the categorical columns -> ONE
-    ``groupBy(variable, value).count() -> groupBy(variable).min(count)``
-    job (two shuffles of a tiny intermediate), instead of one job per
-    column. Map-side partial aggregation keeps the shuffle small
-    (|variables| x |levels| rows).
+    Reads the level histograms of the frame's profile (one pass, shared
+    with the other column readers); a candidate with more than
+    ``LEVEL_CAP`` levels raises ``ValueError``.
     """
     cols = validate_skip_only(cf.variables, skip, only)
     cand = [c for c in cols if cf.catalog.get(c) in (BINARY, CATEGORICAL)]
     if not cand:
         return _colfilter_result(cf, cf.variables, [], {"min_level_counts": {}})
-    long = cf.df.selectExpr(
-        *[f"CAST({qname(c)} AS STRING) AS {qname(c)}" for c in cand]
-    ).unpivot([], None, "variable", "value")
-    mins = (
-        long.where(F.col("value").isNotNull())
-        .groupBy("variable", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("variable")
-        .agg(F.min("cnt").alias("min_cnt"))
-        .collect()
-    )
-    min_counts = {r["variable"]: r["min_cnt"] for r in mins}
+    hist = frame_profile(cf).level_counts(cand)
+    min_counts = {c: min(k for _, k in hist[c]) for c in cand if hist[c]}
     dropped = sorted(c for c in cand if min_counts.get(c, 0) < n)
     keep = [c for c in cf.variables if c not in set(dropped)]
     return _colfilter_result(cf, keep, dropped, {"min_level_counts": min_counts})
