@@ -26,7 +26,7 @@ Eligibility (everything else falls back to the grouped kernel):
   against the collected cells);
 - total cells per variable bounded by ``max_cells``.
 
-Reference parity: the per-variable flow mirrors _make_assoc_kernel
+Reference parity: the per-variable flow mirrors _make_assoc_block_kernel
 (analyze.py) / reference glm_regression.py:450-565 — complete-case
 cells, min_n gate, non-varying covariates dropped, treatment coding on
 complete-case sorted levels, Wald z for continuous/binary, LRT +

@@ -28,22 +28,31 @@ mapping leaves out gets an all-NaN row.
 
 The grouped tail is laid out in variable blocks:
 
-    wide df --posexplode(array(array(block 0 values), array(block 1 ...)))-->
-        (ID, outcome, covars..., __block, __values: array<string>)
-        --groupBy("__block").applyInPandas(per-variable numpy GLM kernel,
-                                            once per variable of the block)
+    wide df --inline(array(named_struct(block 0), named_struct(block 1), ...))-->
+        (ID, outcome, covars..., __block,
+         __cont: array<double>, __disc: array<string>)
+        --groupBy("__block").applyInPandas(block kernel: parse the outcome
+                                            and covariates once, then one
+                                            numpy GLM per variable)
         --> result rows --repartition(1).sortWithinPartitions(pvalue)
 
 Each row ships once per block (rows x blocks records, not one per
 (row, variable)): the blocks are round-robin slices of the variables,
 ``max(4 x defaultParallelism, ceil(variables / 64))`` of them (at most
-one per variable), so a block's kernel task holds rows x <=64 string
-values in Python. The kernels see the per-variable long form
-unchanged — key ``(variable,)``, the id columns plus ``variable`` and
-``value`` — with the values cast to strings in one ``selectExpr``
-parse. The result (one row per variable, <=10^6 rows) is sorted on ONE
-partition (``catalog.sort_result``): a global ``orderBy`` would plan a
-range exchange whose sampling job runs the whole fan-out a second time.
+one per variable), so a block's kernel task holds rows x <=64 values in
+Python. A block's continuous variables travel as doubles
+(``CAST(v AS DOUBLE)``, as ``olsagg`` reads them, so NaN is missing like
+null) and its binary/categorical variables as strings (levels keep the
+order and ``[T.level]`` names they have in the reference); a block with
+no variable on a side carries a typed empty array there, and a side no
+block uses is left out. The unweighted kernel works
+on the block's numpy arrays (``_make_assoc_block_kernel``); the
+survey-weighted kernel and a custom ``regression_kind`` see the
+per-variable long form — key ``(variable,)``, the id columns plus
+``variable`` and ``value`` — through ``_block_kernel``. The result (one
+row per variable, <=10^6 rows) is sorted on ONE partition
+(``catalog.sort_result``): a global ``orderBy`` would plan a range
+exchange whose sampling job runs the whole fan-out a second time.
 
 Kernel inputs that are identical across groups (covariate types/levels,
 family, min_n) ride along as a tiny closure-captured dict (broadcast by
@@ -113,7 +122,7 @@ __all__ = [
 SURVEY_MAX_UNITS = 16384
 
 # Widest variable block of the grouped tail: a block's kernel task holds
-# rows x this many string values in Python.
+# rows x this many values in Python.
 BLOCK_WIDTH = 64
 
 RESULT_SCHEMA = T.StructType(
@@ -174,35 +183,84 @@ def _design_matrix(
     sub: pd.DataFrame,
     covariates: Sequence[str],
     covar_types: Mapping[str, str],
-) -> tuple[np.ndarray, list[str], list[str]]:
-    """Intercept + encoded covariates. Categorical covariates are
-    treatment-coded against their *present* sorted levels (the reference
-    drops empty categories after the complete-case mask,
-    glm_regression.py:510-520, then patsy uses sorted levels).
-    Returns (matrix, names, warnings)."""
-    n = len(sub)
-    cols = [np.ones(n)]
-    names = ["Intercept"]
-    warns: list[str] = []
+) -> tuple[np.ndarray, list[str]]:
+    """Intercept + encoded covariates of a complete-case frame. Categorical
+    covariates are treatment-coded against their *present* sorted levels
+    (the reference drops empty categories after the complete-case mask,
+    glm_regression.py:510-520, then patsy uses sorted levels); a
+    covariate that does not vary is dropped. Returns (matrix, names)."""
+    _, parsed = _parse_covariates(sub, covariates, covar_types)
+    return _reduced_design(parsed, np.ones(len(sub), dtype=bool))
+
+
+def _block_values(
+    pdf: pd.DataFrame, block: list[str], rv_types: Mapping[str, str]
+) -> dict[str, np.ndarray]:
+    """Each variable of a block (``_block_layout``) as one column of
+    values: float64 (NaN where missing) for a continuous variable, strings
+    (None where missing) for a binary/categorical one."""
+    values = {}
+    for (col, _), names in zip(_SIDES, _split_block(block, rv_types)):
+        if names:
+            x = np.stack(pdf[col].to_numpy())
+            values.update({v: x[:, j] for j, v in enumerate(names)})
+    return values
+
+
+def _result_frame(rows: list[dict]) -> pd.DataFrame:
+    out = pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
+    out["N"] = out["N"].astype("Int64")
+    return out
+
+
+def _parse_covariates(
+    pdf: pd.DataFrame, covariates: Sequence[str], covar_types: Mapping[str, str]
+) -> tuple[np.ndarray, list[tuple]]:
+    """Once per block: the rows where every covariate is present, and each
+    covariate as ``(name, values, levels)`` — float values and
+    ``levels=None`` when continuous, codes into its sorted levels when
+    binary/categorical."""
+    base = np.ones(len(pdf), dtype=bool)
+    parsed = []
     for cv in covariates:
-        vals = sub[cv]
-        if vals.nunique(dropna=True) <= 1:
-            warns.append(f"non-varying covariate '{cv}' ignored")
-            continue
+        col = pdf[cv]
+        present = col.notna().to_numpy()
+        base &= present
         if covar_types.get(cv) in (BINARY, CATEGORICAL):
-            levels = sorted(vals.dropna().unique().tolist())
-            mat, nm = dummy_encode(vals.to_numpy(), levels, cv)
-            if mat.shape[1]:
-                cols.append(mat)
-                names.extend(nm)
+            levels, codes = np.unique(col.to_numpy()[present], return_inverse=True)
+            full = np.full(len(pdf), -1)
+            full[present] = codes
+            parsed.append((cv, full, levels))
         else:
-            cols.append(vals.to_numpy(dtype=float))
+            parsed.append((cv, col.to_numpy(dtype=float), None))
+    return base, parsed
+
+
+def _reduced_design(parsed: list[tuple], mask: np.ndarray) -> tuple[np.ndarray, list[str]]:
+    """Intercept + encoded covariates over the rows of ``mask``, from
+    parsed covariates (``_parse_covariates``): a covariate that does not
+    vary among those rows is dropped, a discrete one is treatment-coded
+    against its levels present there."""
+    n = int(mask.sum())
+    cols = [np.ones((n, 1))]
+    names = ["Intercept"]
+    for cv, values, levels in parsed:
+        v = values[mask]
+        if levels is None:
+            if n == 0 or (v == v[0]).all():
+                continue
+            cols.append(v[:, None])
             names.append(cv)
-    X = np.column_stack([c if c.ndim == 2 else c[:, None] for c in cols])
-    return X, names, warns
+            continue
+        present = np.flatnonzero(np.bincount(v, minlength=len(levels)))
+        if len(present) <= 1:
+            continue
+        cols.append((v[:, None] == present[1:]).astype(float))
+        names.extend(f"{cv}[T.{levels[k]}]" for k in present[1:])
+    return np.hstack(cols), names
 
 
-def _make_assoc_kernel(
+def _make_assoc_block_kernel(
     outcome: str,
     covariates: list[str],
     covar_types: dict[str, str],
@@ -210,104 +268,81 @@ def _make_assoc_kernel(
     family: str,
     min_n: int,
     report_categorical_betas: bool,
+    blocks: list[list[str]],
 ):
-    """Build the per-variable kernel for one outcome's grouped tail.
+    """Build the unweighted grouped tail's kernel: key ``(block,)``, a pdf
+    of the id columns plus ``__cont``/``__disc`` (the block layout of the
+    module docstring), one result frame per block.
 
-    The kernel takes key ``(rv,)`` and a pdf of the id columns plus
-    ``variable`` and ``value`` (``rv``'s values as strings, ``None`` for
-    nulls). ``_block_kernel`` calls it once per variable of a block, on
-    the block's rows: a block task holds rows x <=64 (``BLOCK_WIDTH``)
-    values.
-
-    Mirrors the reference per-RV flow (_run_rv, glm_regression.py:450-565):
-    complete-case mask -> min_n gate -> drop non-varying covariates ->
-    fit -> extract Wald (continuous/binary RV) or LRT (categorical RV).
+    The outcome and covariates are parsed once per block; each variable
+    then follows the reference per-RV flow (_run_rv,
+    glm_regression.py:450-565): complete-case mask -> min_n gate -> drop
+    non-varying covariates -> fit -> extract Wald (continuous/binary RV)
+    or LRT (categorical RV). A variable whose fit fails gets the all-NaN
+    row.
     """
 
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        rv = key[0]
+    def variable_rows(rv, x, y, base, parsed) -> list[dict]:
         vtype = rv_types[rv]
-        rows: list[dict] = []
-        try:
-            use_cols = [outcome, *covariates, "value"]
-            sub = pdf[use_cols].dropna()
-            n_complete = len(sub)
-            if n_complete < min_n:
-                raise ValueError(f"too few complete observations ({n_complete} < {min_n})")
-            y = sub[outcome].to_numpy(dtype=float)
-            Xr, names_r, _ = _design_matrix(sub, covariates, covar_types)
+        present = ~np.isnan(x) if vtype == CONTINUOUS else pd.notna(x)
+        mask = base & present
+        n_complete = int(mask.sum())
+        if n_complete < min_n:
+            raise ValueError(f"too few complete observations ({n_complete} < {min_n})")
+        y = y[mask]
+        x = x[mask]
+        Xr, names_r = _reduced_design(parsed, mask)
+        row = _default_row(rv, outcome)
+        row.update(Variable_type=vtype, N=n_complete)
+        if vtype == CONTINUOUS:
+            res = fit_glm(np.hstack([Xr, x[:, None]]), y, names_r + [rv], family)
+            if res.converged:
+                b, s, p = res.by_name()[rv]
+                row.update(Converged=True, Beta=b, SE=s, Beta_pvalue=p, pvalue=p)
+            return [row]
+        if vtype not in (BINARY, CATEGORICAL):
+            raise ValueError(f"unsupported regression variable type {vtype!r}")
+        mat, nm = dummy_encode(x, _sorted_levels(x), rv)
+        res = fit_glm(np.hstack([Xr, mat]), y, names_r + nm, family)
+        if vtype == BINARY:
+            if res.converged and nm:
+                b, s, p = res.by_name()[nm[0]]
+                row.update(Converged=True, Beta=b, SE=s, Beta_pvalue=p, pvalue=p)
+            return [row]
+        res_r = fit_glm(Xr, y, names_r, family)
+        if not (res.converged and res_r.converged):
+            return [row]
+        lrdf = res_r.df_resid - res.df_resid
+        lrstat = -2.0 * (res_r.llf - res.llf)
+        lr_p = float(chi2_sf(lrstat, lrdf)) if lrdf > 0 else np.nan
+        row.update(Converged=True, LRT_pvalue=lr_p, Diff_AIC=res.aic - res_r.aic, pvalue=lr_p)
+        if not report_categorical_betas:
+            return [row]
+        # no rows when there is no level to report (a single-level
+        # categorical), as in the weighted kernel
+        by = res.by_name()
+        rows = []
+        for param in nm:
+            b, s, p = by[param]
+            rows.append(dict(row, Category=param, Beta=b, SE=s, Beta_pvalue=p))
+        return rows
 
-            if vtype == CONTINUOUS:
-                x = pd.to_numeric(sub["value"]).to_numpy(dtype=float)[:, None]
-                X = np.hstack([Xr, x])
-                res = fit_glm(X, y, names_r + [rv], family)
-                row = _default_row(rv, outcome)
-                row.update(Variable_type=vtype, N=n_complete)
-                if res.converged:
-                    b, s, p = res.by_name()[rv]
-                    row.update(Converged=True, Beta=b, SE=s, Beta_pvalue=p, pvalue=p)
-                rows.append(row)
-            elif vtype in (BINARY, CATEGORICAL):
-                levels = _sorted_levels(sub["value"])
-                mat, nm = dummy_encode(sub["value"].to_numpy(), levels, rv)
-                X = np.hstack([Xr, mat])
-                res = fit_glm(X, y, names_r + nm, family)
-                if vtype == BINARY:
-                    row = _default_row(rv, outcome)
-                    row.update(Variable_type=vtype, N=n_complete)
-                    if res.converged and nm:
-                        b, s, p = res.by_name()[nm[0]]
-                        row.update(Converged=True, Beta=b, SE=s, Beta_pvalue=p, pvalue=p)
-                    rows.append(row)
-                else:
-                    res_r = fit_glm(Xr, y, names_r, family)
-                    if res.converged and res_r.converged:
-                        lrdf = res_r.df_resid - res.df_resid
-                        lrstat = -2.0 * (res_r.llf - res.llf)
-                        lr_p = float(chi2_sf(lrstat, lrdf)) if lrdf > 0 else np.nan
-                        diff_aic = res.aic - res_r.aic
-                        if report_categorical_betas:
-                            by = res.by_name()
-                            for param in nm:
-                                b, s, p = by[param]
-                                row = _default_row(rv, outcome)
-                                row.update(
-                                    Variable_type=vtype,
-                                    N=n_complete,
-                                    Converged=True,
-                                    Category=param,
-                                    Beta=b,
-                                    SE=s,
-                                    Beta_pvalue=p,
-                                    LRT_pvalue=lr_p,
-                                    Diff_AIC=diff_aic,
-                                    pvalue=lr_p,
-                                )
-                                rows.append(row)
-                        else:
-                            row = _default_row(rv, outcome)
-                            row.update(
-                                Variable_type=vtype,
-                                N=n_complete,
-                                Converged=True,
-                                LRT_pvalue=lr_p,
-                                Diff_AIC=diff_aic,
-                                pvalue=lr_p,
-                            )
-                            rows.append(row)
-                    else:
-                        row = _default_row(rv, outcome)
-                        row.update(Variable_type=vtype, N=n_complete)
-                        rows.append(row)
-            else:
-                raise ValueError(f"unsupported regression variable type {vtype!r}")
-        except Exception:
-            rows = [_default_row(rv, outcome)]
-        # no rows when report_categorical_betas finds no level to report
-        # (a single-level categorical), as in the weighted kernel
-        out = pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
-        out["N"] = out["N"].astype("Int64")
-        return out[[f.name for f in RESULT_SCHEMA.fields]]
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        names = blocks[key[0]]
+        try:
+            values = _block_values(pdf, names, rv_types)
+            y = pdf[outcome].to_numpy(dtype=float)
+            base, parsed = _parse_covariates(pdf, covariates, covar_types)
+            base &= ~np.isnan(y)
+        except (TypeError, ValueError):  # a covariate that does not parse fails every fit
+            return _result_frame([_default_row(rv, outcome) for rv in names])
+        rows: list[dict] = []
+        for rv in names:
+            try:
+                rows.extend(variable_rows(rv, values[rv], y, base, parsed))
+            except Exception:
+                rows.append(_default_row(rv, outcome))
+        return _result_frame(rows)
 
     return kernel
 
@@ -387,20 +422,60 @@ def _variable_blocks(group: list[str], parallelism: int) -> list[list[str]]:
     return [group[k::n_blocks] for k in range(n_blocks)]
 
 
-def _block_kernel(kernel, id_vars: list[str], blocks: list[list[str]]):
+# The grouped tail's two value arrays, in ``_split_block`` order.
+_SIDES = (("__cont", "DOUBLE"), ("__disc", "STRING"))
+
+
+def _split_block(block: list[str], rv_types: Mapping[str, str]) -> tuple[list[str], list[str]]:
+    """A block's continuous variables and its binary/categorical ones, in
+    block order: the ``__cont`` and ``__disc`` arrays of its rows."""
+    cont = [v for v in block if rv_types[v] == CONTINUOUS]
+    return cont, [v for v in block if rv_types[v] != CONTINUOUS]
+
+
+def _typed_array(variables: list[str], sql_type: str) -> str:
+    if not variables:
+        return f"CAST(array() AS ARRAY<{sql_type}>)"
+    return "array(" + ", ".join(f"CAST({qname(v)} AS {sql_type})" for v in variables) + ")"
+
+
+def _block_layout(
+    df: DataFrame, id_vars: list[str], blocks: list[list[str]], rv_types: Mapping[str, str]
+) -> DataFrame:
+    """The grouped tail's input: each row once per block, carrying the
+    block's continuous values as ``__cont: array<double>`` and its
+    binary/categorical values as ``__disc: array<string>`` (``_split_block``
+    order), in ONE ``selectExpr`` generator over one struct per block. A
+    side that no block uses is left out; a block with no variable on a
+    side the others use carries a typed empty array there."""
+    split = [_split_block(b, rv_types) for b in blocks]
+    sides = [(i, side) for i, side in enumerate(_SIDES) if any(s[i] for s in split)]
+    structs = [
+        f"named_struct('__block', {k}, "
+        + ", ".join(f"'{col}', {_typed_array(s[i], sql_type)}" for i, (col, sql_type) in sides)
+        + ")"
+        for k, s in enumerate(split)
+    ]
+    return df.selectExpr(
+        *[qname(c) for c in id_vars], f"inline(array({', '.join(structs)}))"
+    )
+
+
+def _block_kernel(
+    kernel, id_vars: list[str], blocks: list[list[str]], rv_types: Mapping[str, str]
+):
     """Adapt a per-variable kernel (key ``(rv,)``; pdf = id columns +
-    ``variable`` + ``value``) to one variable block: the block's string
-    values arrive as one array per row and each variable's column is
-    handed to ``kernel`` exactly as the long form carried it."""
+    ``variable`` + ``value``) to one variable block: each variable's
+    ``value`` column is rebuilt from whichever array holds it — float64
+    (NaN where missing) for a continuous variable, strings (None where
+    missing) for a binary/categorical one. The survey-weighted kernel and
+    custom ``regression_kind`` factories run through this adapter."""
 
     def block_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         names = blocks[key[0]]
-        vals = np.stack(pdf["__values"].to_numpy())
+        value = _block_values(pdf, names, rv_types)
         ids = pdf[id_vars]
-        parts = [
-            kernel((rv,), ids.assign(variable=rv, value=vals[:, j]))
-            for j, rv in enumerate(names)
-        ]
+        parts = [kernel((rv,), ids.assign(variable=rv, value=value[rv])) for rv in names]
         # a kernel may report no rows for a variable; leaving those parts
         # out keeps pandas from warning about empty-frame dtypes
         return pd.concat([p for p in parts if len(p)] or parts[:1], ignore_index=True)
@@ -408,12 +483,13 @@ def _block_kernel(kernel, id_vars: list[str], blocks: list[list[str]]):
     return block_kernel
 
 
-def _sorted_levels(values: pd.Series) -> list:
-    """Distinct non-NA values, sorted numerically when every value parses
-    as a number, else lexically — matching pandas' sorted category levels
-    (values keep their original numeric order in the reference even
-    though the grouped tail carries them as strings)."""
-    lv = values.dropna().unique().tolist()
+def _sorted_levels(values) -> list:
+    """Distinct values of a column without missing values, sorted
+    numerically when every value parses as a number, else lexically —
+    matching pandas' sorted category levels (values keep their original
+    numeric order in the reference even though the grouped tail carries
+    them as strings)."""
+    lv = list(dict.fromkeys(values))
     try:
         return sorted(lv, key=float)
     except (TypeError, ValueError):
@@ -533,7 +609,7 @@ def _make_weighted_kernel(
             w = wvals.loc[restricted].to_numpy(dtype=float)
             strat = sub[STRAT_COL].to_numpy(dtype=object)
             clust = sub[CLUST_COL].to_numpy(dtype=object) if has_cluster else None
-            Xr, names_r, _ = _design_matrix(sub, covariates, covar_types)
+            Xr, names_r = _design_matrix(sub, covariates, covar_types)
 
             def compute_vcov(fitted, X):
                 if vcov_method == "jackknife":
@@ -631,9 +707,7 @@ def _make_weighted_kernel(
                 raise ValueError(f"unsupported regression variable type {vtype!r}")
         except Exception:
             rows = [_default_row(rv, outcome)]
-        out = pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
-        out["N"] = out["N"].astype("Int64")
-        return out[[f.name for f in RESULT_SCHEMA.fields]]
+        return _result_frame(rows)
 
     return kernel
 
@@ -854,8 +928,11 @@ def association_study(
         # accepts a custom Regression subclass): a factory
         # ``f(outcome, covariates, covar_types, rv_types, family, min_n,
         # report_categorical_betas) -> kernel(key, pdf) -> pd.DataFrame``
-        # whose kernel runs inside the grouped fan-out and must return
-        # rows matching RESULT_SCHEMA.
+        # whose kernel runs inside the grouped fan-out, once per variable
+        # (``_block_kernel``), and must return rows matching
+        # RESULT_SCHEMA. ``pdf["value"]`` holds a continuous variable as
+        # float64 (NaN where missing) and a binary/categorical one as
+        # strings (None where missing).
         custom_kernel_factory = regression_kind
         if survey_design_spec is not None:
             raise ValueError("a custom regression_kind does not support survey designs")
@@ -933,16 +1010,15 @@ def association_study(
         kernel_args = (
             outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
         )
+        per_variable = None  # a kernel the grouped tail runs through _block_kernel
         if survey_design_spec is not None:
             df = df.join(survey_design_spec.df, on=ID_COL, how="left")
             id_vars += survey_design_spec.design_columns()
-            kernel = _make_weighted_kernel(
+            per_variable = _make_weighted_kernel(
                 *kernel_args, consts, weight_info, vcov_method=vcov_method
             )
         elif custom_kernel_factory is not None:
-            kernel = custom_kernel_factory(*kernel_args)
-        else:
-            kernel = _make_assoc_kernel(*kernel_args)
+            per_variable = custom_kernel_factory(*kernel_args)
 
         # each batched route takes the variables it fits and hands the
         # rest on; the grouped tail fits whatever is left
@@ -959,24 +1035,15 @@ def association_study(
         if driver_rows:
             results.append(local_frame(driver_rows, RESULT_SCHEMA))
         if group:
-            # ONE block layout covering every variable type and ONE
-            # selectExpr parse: each row ships once per variable block,
-            # that block's values in one array<string> (int->"1", double
-            # keeps its repr; the kernels recover numerics with
-            # pd.to_numeric)
             blocks = _variable_blocks(group, df.sparkSession.sparkContext.defaultParallelism)
-            arrays = ", ".join(
-                "array(" + ", ".join(f"CAST({qname(v)} AS STRING)" for v in b) + ")"
-                for b in blocks
-            )
-            wide = df.selectExpr(
-                *[qname(c) for c in id_vars],
-                f"posexplode(array({arrays})) AS (__block, __values)",
-            )
+            if per_variable is None:
+                kernel = _make_assoc_block_kernel(*kernel_args, blocks)
+            else:
+                kernel = _block_kernel(per_variable, id_vars, blocks, rv_types)
             results.append(
-                wide.groupBy("__block").applyInPandas(
-                    _block_kernel(kernel, id_vars, blocks), RESULT_SCHEMA
-                )
+                _block_layout(df, id_vars, blocks, rv_types)
+                .groupBy("__block")
+                .applyInPandas(kernel, RESULT_SCHEMA)
             )
 
     out = results[0]
@@ -1041,34 +1108,30 @@ def add_corrected_pvalues(
             F.asc_nulls_last("pvalue_bonferroni"),
         )
 
-    non_na = F.when(F.col(pvalue).isNotNull() & ~F.isnan(pvalue), 1).otherwise(0)
-    with_m = result.withColumn("__m", F.sum(non_na).over(Window.partitionBy()))
-    valid = F.col(pvalue).isNotNull() & ~F.isnan(pvalue)
-    # NULLS LAST explicitly: plain asc() sorts nulls FIRST, which would
-    # hand rank 1 to a missing pvalue and shift every BH rank by one
-    w_rank = Window.orderBy(F.asc_nulls_last(pvalue))  # NaN also sorts last in asc
-    # RANGE (not ROWS) frame: peers — rows with a tied pvalue — are always
-    # inside each other's frame, so ties deterministically share the cummin.
-    w_cummin = Window.orderBy(F.desc_nulls_last(pvalue)).rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
+    # one projection per window level, as SQL strings (a handful of py4j
+    # calls instead of one per Column node); invalid pvalues keep a null
+    # correction (reference utils.py:47-58 computes over dropna and
+    # rejoins)
+    p = qname(pvalue)
+    valid = f"({p} IS NOT NULL AND NOT isnan({p}))"
+    m = f"sum(CASE WHEN {valid} THEN 1 ELSE 0 END) OVER ()"
+    # NULLS LAST explicitly: plain ASC sorts nulls FIRST, which would hand
+    # rank 1 to a missing pvalue and shift every BH rank by one (NaN also
+    # sorts last in ASC)
+    rank = f"row_number() OVER (ORDER BY {p} ASC NULLS LAST)"
+    keep = [qname(c) for c in result.columns if c not in ("pvalue_bonferroni", "pvalue_fdr")]
+    raw = result.selectExpr(
+        *keep,
+        f"CASE WHEN {valid} THEN least({p} * {m}, 1.0D) END AS pvalue_bonferroni",
+        f"CASE WHEN {valid} THEN least({p} * {m} / {rank}, 1.0D) END AS __bh_raw",
     )
-    out = (
-        with_m.withColumn("__rank", F.row_number().over(w_rank))
-        .withColumn(
-            "pvalue_bonferroni",
-            F.when(valid, F.least(F.col(pvalue) * F.col("__m"), F.lit(1.0))),
-        )
-        .withColumn(
-            "__bh_raw",
-            F.when(valid, F.least(F.col(pvalue) * F.col("__m") / F.col("__rank"), F.lit(1.0))),
-        )
-        .withColumn(
-            # invalid pvalues keep a null correction (reference
-            # utils.py:47-58 computes over dropna and rejoins)
-            "pvalue_fdr",
-            F.when(valid, F.min("__bh_raw").over(w_cummin)),
-        )
-        .drop("__m", "__rank", "__bh_raw")
+    # RANGE (not ROWS) frame: peers — rows with a tied pvalue — are always
+    # inside each other's frame, so ties deterministically share the cummin
+    out = raw.selectExpr(
+        *keep,
+        "pvalue_bonferroni",
+        f"CASE WHEN {valid} THEN min(__bh_raw) OVER (ORDER BY {p} DESC NULLS LAST"
+        " RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) END AS pvalue_fdr",
     )
     return out.orderBy(F.asc_nulls_last("pvalue_fdr"), F.asc_nulls_last("pvalue_bonferroni"))
 
@@ -1303,7 +1366,7 @@ def _make_interaction_kernel(
             if n_complete < min_n:
                 raise ValueError(f"too few complete observations ({n_complete} < {min_n})")
             y = sub[outcome].to_numpy(dtype=float)
-            Xc, names_c, _ = _design_matrix(sub, covariates, covar_types)
+            Xc, names_c = _design_matrix(sub, covariates, covar_types)
             m1, n1 = _encode_term(sub, "v1", var_types[t1], t1)
             m2, n2 = _encode_term(sub, "v2", var_types[t2], t2)
             X_r = np.hstack([Xc, m1, m2])

@@ -1169,7 +1169,8 @@ def ivf_topk(
         # it and skip this (the r13 embedding_neardup precedent)
         dim = len(queries.select(vec_col).first()[0])
     cents = _train_centroids(corpus, vec_col, n_lists, seed, sample_size, id_col=id_col)
-    assert cents.shape[1] == dim
+    if cents.shape[1] != dim:
+        raise ValueError(f"dim={dim} does not match the {cents.shape[1]}-dimensional vectors")
 
     cvec = F.col(vec_col).cast("array<double>")
     if assign_impl == "pandas":

@@ -159,3 +159,11 @@ def test_ivf_topk_recall_target_matches_tuned_budget(emb, queries):
     auto = _hits(ivf_topk(emb, queries, k=10, n_lists=8, recall_target=0.9))
     manual = _hits(ivf_topk(emb, queries, k=10, n_lists=8, n_probe=n_probe))
     assert auto == manual
+
+
+def test_ivf_topk_rejects_wrong_dim(emb, queries):
+    """A caller-supplied ``dim`` that disagrees with the vectors is bad
+    input: ``ValueError``, not an assertion."""
+    dim = len(emb.first()["embedding"])
+    with pytest.raises(ValueError, match="dim"):
+        ivf_topk(emb, queries, k=10, n_lists=8, n_probe=4, dim=dim + 1)
